@@ -18,7 +18,7 @@ import uuid
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from .session import lineage_cut
+from .session import collect_if_small, env_int, lineage_cut
 
 from .sources import (
     COPURCHASE_EDGES_SQL,
@@ -43,10 +43,9 @@ from .sources import (
 #: inside the "few hundred MB is usually fine" broadcast envelope and
 #: far under the 8 GB / 512M-row hard cap; above the threshold the
 #: callers keep the shuffle join (the 100 TB shape, where per-vertex
-#: state outgrows every executor). Env-tunable for small executors.
-BROADCAST_STATE_ROWS = int(
-    os.environ.get("SPARK_GRAFT_BROADCAST_STATE_ROWS", 8_000_000)
-)
+#: state outgrows every executor). SPARK_GRAFT_BROADCAST_STATE_ROWS
+#: lowers it for small executors.
+BROADCAST_STATE_ROWS = env_int("SPARK_GRAFT_BROADCAST_STATE_ROWS", 8_000_000)
 
 
 def maybe_broadcast(df: DataFrame, n_rows: int | None) -> DataFrame:
@@ -58,6 +57,29 @@ def maybe_broadcast(df: DataFrame, n_rows: int | None) -> DataFrame:
     if n_rows is not None and n_rows <= BROADCAST_STATE_ROWS:
         return F.broadcast(df)
     return df
+
+
+def min_id_components(a, b) -> dict[int, int]:
+    """In-driver union-find over the pairs ``zip(a, b)``: maps every
+    endpoint to the minimum id of its connected component — the labels
+    the distributed min-propagation engines converge to, so each hybrid
+    tail closes with it. Union by min root with path halving; the
+    result does not depend on pair order (a root is always its
+    component's minimum id)."""
+    parent: dict[int, int] = {}
+
+    def find(x):
+        parent.setdefault(x, x)
+        while parent[x] != x:
+            parent[x] = parent[parent[x]]
+            x = parent[x]
+        return x
+
+    for u, v in zip(a, b):
+        ru, rv = find(u), find(v)
+        if ru != rv:
+            parent[max(ru, rv)] = min(ru, rv)
+    return {x: find(x) for x in parent}
 
 
 def symmetrize(edges: DataFrame) -> DataFrame:
@@ -2826,24 +2848,11 @@ def q_mst_boruvka(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
             .transform(lambda df: lineage_cut(df, eager=False))
         )
-        # fused round probe (r20, guide §1.2, the louvain-probe idiom):
-        # ONE limit-bounded Arrow collect materializes the best and ce
-        # checkpoints, answers the termination probe AND the inline-vs-
-        # distributed branch, and — on the inline branch — IS the
-        # driver transfer. The r19 round paid three driver calls
-        # (best.isEmpty(); ce.count(); ce.toLocalIterator()).
-        # Exactness: ce is empty ⟺ best is empty (best's endpoints
-        # always hit the comp map, and cu ≠ cv rows survive the
-        # distinct), so the break fires on exactly the rounds the old
-        # isEmpty broke on; limit(T+1) returns min(rows, T+1), so
-        # len(pdf) ≤ T ⟺ ce_rows ≤ T and on the inline branch the
-        # limit did not truncate — the edge multiset is intact. At
-        # scale the lazy checkpoint backfills its remaining partitions
-        # in the probe job's doCheckpoint (the same full
-        # materialization the old count paid), transferring at most
-        # T+1 narrow rows.
-        pdf = ce.limit(MST_INLINE_MERGE_EDGES + 1).toPandas()
-        if len(pdf) == 0:
+        # the hybrid-tail probe is also the termination test: ce is
+        # empty ⟺ best is empty (best's endpoints always hit the comp
+        # map, and cu ≠ cv rows survive the distinct)
+        pdf = collect_if_small(ce, MST_INLINE_MERGE_EDGES)
+        if pdf is not None and len(pdf) == 0:
             break
         # lazy accumulation (r20): a chosen edge's two components merge
         # this round, so both its endpoints share a component forever
@@ -2855,26 +2864,10 @@ def q_mst_boruvka(spark: SparkSession, sf_dir: str) -> DataFrame:
         # same multiset; within-round duplicates are already removed by
         # best's own distinct.
         chosen_all = chosen_all.unionByName(best)
-        if len(pdf) <= MST_INLINE_MERGE_EDGES:
-            # in-driver union-find with min-id roots — identical labels
-            # to the min-propagation fixpoint (min id per component);
-            # order-independent (the root of a component is always its
-            # minimum id), so the Arrow row order is immaterial.
-            parent: dict = {}
-
-            def _find(x):
-                parent.setdefault(x, x)
-                while parent[x] != x:
-                    parent[x] = parent[parent[x]]
-                    x = parent[x]
-                return x
-
-            for a, b in zip(pdf["a"].tolist(), pdf["b"].tolist()):
-                ra, rb = _find(a), _find(b)
-                if ra != rb:
-                    parent[max(ra, rb)] = min(ra, rb)
+        if pdf is not None:
             lbl = spark.createDataFrame(
-                [(c, _find(c)) for c in parent], "c LONG, lbl LONG"
+                list(min_id_components(pdf["a"].tolist(), pdf["b"].tolist()).items()),
+                "c LONG, lbl LONG",
             )
         else:
             # lazy cut + count (r20): one driver call materializes the
@@ -2927,9 +2920,9 @@ def q_mst_boruvka(spark: SparkSession, sf_dir: str) -> DataFrame:
                 lbl = new_lbl
                 if done:
                     break
-        # inline-branch lbl is a LocalRelation (accurate size → the
-        # planner broadcasts it itself); the distributed branch's lbl
-        # gets the explicit gate
+        # both branches' lbl get the explicit gate: the inline
+        # createDataFrame(list, ddl) analyzes to a LogicalRDD, which
+        # carries no size estimate the planner could broadcast on
         comp = (
             comp.join(
                 maybe_broadcast(
@@ -3136,6 +3129,10 @@ FROM rows_k ORDER BY k
 # Butterfly (bipartite 4-cycle) counting (SURVEY §2.28)
 # ---------------------------------------------------------------------------
 
+#: wedge-join output rows per task: q_butterfly and q_butterfly_sampled
+#: size their wedge self-join's hash repartition from its output volume
+WEDGE_ROWS_PER_TASK = 4_000_000
+
 
 def q_butterfly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Butterfly counting (Sanei-Mehri 2018): the butterfly — a 2×2
@@ -3177,7 +3174,7 @@ def q_butterfly(spark: SparkSession, sf_dir: str) -> DataFrame:
     # one-row wedge stats FIRST (a cheap aggregate over the edge
     # checkpoint), emit it as an exact BIGINT literal, and size an
     # explicit hash repartition of the join input from the OUTPUT
-    # volume — rows-per-task tunable, floor at the session
+    # volume — WEDGE_ROWS_PER_TASK rows a task, floor at the session
     # parallelism, no cap (at 100 TB wedge counts the count grows the
     # partitioning, exactly the scale-adaptive sizing §2.2 asks for).
     # Both join sides derive from the same repartitioned frame, so the
@@ -3189,10 +3186,9 @@ def q_butterfly(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.expr("sum(d * (d - 1)) div 2").alias("n_wedges"))
         .collect()[0]["n_wedges"]
     )
-    rows_per_task = int(os.environ.get("SPARK_GRAFT_WEDGE_ROWS_PER_TASK", 4_000_000))
     n_parts = max(
         spark.sparkContext.defaultParallelism,
-        -(-int(2 * (n_wedges or 0)) // rows_per_task),
+        -(-int(2 * (n_wedges or 0)) // WEDGE_ROWS_PER_TASK),
     )
     er = e.repartition(n_parts, "dst")
     pairs = (
@@ -3304,10 +3300,9 @@ def q_butterfly_sampled(spark: SparkSession, sf_dir: str) -> DataFrame:
         .agg(F.expr("sum(d * (d - 1)) div 2").alias("n_wedges_sampled"))
         .collect()[0]["n_wedges_sampled"]
     )
-    rows_per_task = int(os.environ.get("SPARK_GRAFT_WEDGE_ROWS_PER_TASK", 4_000_000))
     n_parts = max(
         spark.sparkContext.defaultParallelism,
-        -(-int(2 * (n_wedges or 0)) // rows_per_task),
+        -(-int(2 * (n_wedges or 0)) // WEDGE_ROWS_PER_TASK),
     )
     er = e.repartition(n_parts, "dst")
     pairs = (

@@ -24,14 +24,14 @@ sub-round — a standard parallel-Louvain trick.
 
 from __future__ import annotations
 
-import os
+import logging
 import time
 from dataclasses import dataclass, field
 
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
-from .session import lineage_cut
+from .session import collect_if_small, lineage_cut
 
 from .graph import (
     BROADCAST_STATE_ROWS,
@@ -44,6 +44,7 @@ from .graph import (
     coarsen_edges,
     degree_weighted,
     maybe_broadcast,
+    min_id_components,
     mod10_assignment,
     symmetrize,
     vertices_of,
@@ -51,8 +52,8 @@ from .graph import (
 from .metrics import modularity
 from .sources import COPURCHASE_EDGES_SQL, copurchase_edges, karate_edges
 
-#: set SPARK_GRAFT_VERBOSE=1 for driver-side round/level progress prints
-_VERBOSE = os.environ.get("SPARK_GRAFT_VERBOSE", "") not in ("", "0")
+#: driver-side round/level progress, at DEBUG level
+_log = logging.getLogger("louvain_modularity_spark")
 
 # ---------------------------------------------------------------------------
 # phase-1 building blocks (relational, oracle-checkable)
@@ -878,11 +879,7 @@ def _one_level(
                     # guarantee on the break-without-idle-round exit
                 )
         total_moves += n_moves
-        if _VERBOSE:
-            print(
-                f"    round {rnd}: moves={n_moves} [{time.time() - t_round:.1f}s]",
-                flush=True,
-            )
+        _log.debug("round %d: moves=%d [%.1fs]", rnd, n_moves, time.time() - t_round)
         if n_moves == 0:
             idle_rounds += 1
             if idle_rounds >= 2:  # both parity classes idle → fixpoint
@@ -953,19 +950,8 @@ def louvain_communities(
     mod_prev: float | None = None
     level = 0
     while True:
-        # fused inline probe (r19): ONE limit-bounded Arrow collect
-        # decides the inline-vs-distributed branch AND, when inline,
-        # IS the driver transfer — replacing the old persist + count +
-        # toPandas (two full passes + a pinned cache). limit(T+1)
-        # returns min(n, T+1) rows, so len(pdf) <= T  <=>  n <= T: the
-        # branch decision is exactly the old count comparison, and on
-        # the inline branch the limit did not truncate, so the edge
-        # multiset (canonically sorted below) is unchanged. At scale
-        # the probe short-circuits (CollectLimit reads a few
-        # partitions) and transfers at most T+1 rows before the
-        # distributed branch persists the full set as before.
-        pdf = edges.limit(inline_threshold + 1).toPandas()
-        if len(pdf) <= inline_threshold:
+        pdf = collect_if_small(edges, inline_threshold)
+        if pdf is not None:
             # ---- in-driver exact tail (Arrow transfer, not Row objects) ----
             n_edges = len(pdf)
             import numpy as np
@@ -995,8 +981,7 @@ def louvain_communities(
                     w_a[order].tolist(),
                 )
             )
-            if _VERBOSE:
-                print(f"  level {level}: inline tail ({n_edges} edges)", flush=True)
+            _log.debug("level %d: inline tail (%d edges)", level, n_edges)
             remaining = None if max_level is None else max_level - level
             if rows and (remaining is None or remaining > 0):
                 maps, mods = _sequential_louvain(
@@ -1035,11 +1020,7 @@ def louvain_communities(
         # persist for the level's many consumers (sym, deg, m,
         # modularity, coarsen), exactly as the pre-probe code did
         edges = edges.persist()
-        if _VERBOSE:
-            print(
-                f"  level {level}: distributed (>{inline_threshold} edges)",
-                flush=True,
-            )
+        _log.debug("level %d: distributed (>%d edges)", level, inline_threshold)
         level_assign, n_moves = _one_level(
             spark,
             edges,
@@ -1073,8 +1054,7 @@ def louvain_communities(
             )
         else:
             mod_new = modularity(edges, level_assign, gamma)
-        if _VERBOSE:
-            print(f"  level {level}: moves={n_moves} Q={mod_new:.6f}", flush=True)
+        _log.debug("level %d: moves=%d Q=%.6f", level, n_moves, mod_new)
         result.dendrogram.append(global_assign)
         result.modularities.append(mod_new)
         level += 1
@@ -1231,16 +1211,9 @@ def connected_components_star(spark: SparkSession, edges: DataFrame) -> DataFram
     component-merge residues) take this branch; everything larger
     keeps the published O(log n) distributed rounds. Both branches are
     pinned equal by the monkeypatched golden in tests/test_louvain.py."""
-    # edges kept in point-to-smaller form: (u, v) with v < u, distinct
-    # fused inline probe (r20, guide §1.2, the louvain-probe idiom):
-    # ONE limit-bounded Arrow collect materializes the edge checkpoint,
-    # decides the inline-vs-distributed branch AND, when inline, IS the
-    # driver transfer — the r19 shape paid an eager cut, a count and a
-    # toLocalIterator (3+ driver calls). limit(T+1) returns
-    # min(rows, T+1), so len(pdf) ≤ T ⟺ the old count comparison, and
-    # on the inline branch the limit did not truncate — the edge
-    # multiset is intact. verts becomes a lazy cut materialized by the
-    # final assembly join (same single evaluation, one fewer call).
+    # edges kept in point-to-smaller form: (u, v) with v < u, distinct;
+    # both cuts are lazy: the probe below materializes e, and the final
+    # assembly join materializes verts
     e = lineage_cut(
         symmetrize(edges)
         .filter(F.col("src") != F.col("dst"))
@@ -1251,25 +1224,11 @@ def connected_components_star(spark: SparkSession, edges: DataFrame) -> DataFram
         eager=False,
     )
     verts = lineage_cut(vertices_of(edges), eager=False)
-    pdf = e.limit(CC_INLINE_EDGES + 1).toPandas()
-    if len(pdf) <= CC_INLINE_EDGES:
-        parent: dict = {}
-
-        def _find(x):
-            parent.setdefault(x, x)
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        # order-independent result: the root of a component is always
-        # its minimum id, so the Arrow row order is immaterial
-        for u, v in zip(pdf["u"].tolist(), pdf["v"].tolist()):
-            ru, rv = _find(u), _find(v)
-            if ru != rv:
-                parent[max(ru, rv)] = min(ru, rv)
+    pdf = collect_if_small(e, CC_INLINE_EDGES)
+    if pdf is not None:
         lbl = spark.createDataFrame(
-            [(n, _find(n)) for n in parent], "id LONG, component LONG"
+            list(min_id_components(pdf["u"].tolist(), pdf["v"].tolist()).items()),
+            "id LONG, component LONG",
         )
         return verts.join(lbl, "id", "left").select(
             "id", F.coalesce("component", F.col("id")).alias("component")

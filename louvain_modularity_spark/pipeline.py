@@ -19,15 +19,19 @@ from __future__ import annotations
 import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession, Window
 
-from .session import fan_out, lineage_cut
+from .session import collect_if_small, fan_out, lineage_cut
 
-from .graph import maybe_broadcast
+from .graph import maybe_broadcast, min_id_components
 from .llm_ops import _DOT_SQL, ngram_jaccard_pairs, shingles_of
 from .louvain import connected_components
 from .sources import load
 
 #: near-dup clustering edge threshold (exact n-gram Jaccard)
 DUP_JACCARD = 0.5
+#: dup-pair graphs at or below this many edges are union-found in the
+#: driver (q_dup_clusters' hybrid tail); module-level so tests can
+#: monkeypatch it to force the distributed branch
+DUP_INLINE_EDGES = 1_000_000
 #: sequence-packing context window, in whitespace tokens
 PACK_TOKENS = 256
 #: contamination shingle width / benchmark-membership modulus
@@ -58,7 +62,7 @@ def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     relative to the corpus (most docs are singletons and never enter
     the iteration); the final join back to the corpus is a broadcast
     of the clustered minority. Like Louvain's hybrid tail, a pair
-    graph under ``inline_threshold`` is collected and union-found in
+    graph under ``DUP_INLINE_EDGES`` is collected and union-found in
     the driver (identical min-id components, none of the superstep
     fixed costs); above it the distributed min-propagation runs."""
     d = load(spark, sf_dir, "documents")
@@ -83,36 +87,14 @@ def q_dup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         # the same job that answers the branch decision)
         .transform(lambda df: lineage_cut(df, eager=False))
     )
-    inline_threshold = 1_000_000
-    # fused inline probe (r20, guide §1.2, the louvain-probe idiom):
-    # ONE limit-bounded Arrow collect materializes the pair checkpoint,
-    # decides inline-vs-distributed AND, when inline, IS the driver
-    # transfer — the r19 shape paid an eager cut, a count and a
-    # pickled-Row collect (3 driver calls). limit(T+1) returns
-    # min(rows, T+1), so len(pdf) ≤ T ⟺ the old count comparison, and
-    # on the inline branch the limit did not truncate — the pair
-    # multiset is intact (union-find is order-independent anyway: the
-    # root of a component is always its minimum id).
-    pdf = edges.select("src", "dst").limit(inline_threshold + 1).toPandas()
-    if len(pdf) <= inline_threshold:
-        parent: dict[int, int] = {}
-
-        def find(x: int) -> int:
-            while parent.get(x, x) != x:
-                parent[x] = parent.get(parent[x], parent[x])
-                x = parent[x]
-            return x
-
-        for ra, rb in zip(pdf["src"].tolist(), pdf["dst"].tolist()):
-            ra, rb = find(ra), find(rb)
-            if ra != rb:
-                # union by min id so the root IS the component label
-                lo, hi = min(ra, rb), max(ra, rb)
-                parent[hi] = lo
-        rows = [(x, find(x)) for x in list(parent)]
+    pdf = collect_if_small(edges.select("src", "dst"), DUP_INLINE_EDGES)
+    if pdf is not None:
+        # roots map to themselves, which the coalesce below supplies:
+        # ship only the clustered non-root docs to the final join
+        labels = min_id_components(pdf["src"].tolist(), pdf["dst"].tolist())
         comp = spark.createDataFrame(
-            rows or [(None, None)], "doc_id LONG, cluster LONG"
-        ).filter(F.col("doc_id").isNotNull())
+            [(x, r) for x, r in labels.items() if x != r], "doc_id LONG, cluster LONG"
+        )
     else:
         comp = connected_components(spark, edges).select(
             F.col("id").alias("doc_id"), F.col("component").alias("cluster")

@@ -8,8 +8,22 @@ conf applied via :func:`ensure_conf` — never assumed at build time.
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
+
+def env_int(name: str, default: int) -> int:
+    """Integer deployment knob from the environment: ``default`` when
+    unset or empty, and — with a warning — when the value is not an
+    integer, so a typo in a launch script cannot crash the import."""
+    raw = os.environ.get(name, "")
+    if not raw.strip():
+        return default
+    try:
+        return int(raw)
+    except ValueError:
+        warnings.warn(f"{name}={raw!r} is not an integer; using {default}", stacklevel=2)
+        return default
 
 # - nanosAsLong: earlier harness vintages stored events.ts as parquet
 #   TIMESTAMP(NANOS), which Spark 4 cannot map to a Catalyst type; with
@@ -120,8 +134,6 @@ def lineage_cut(df, eager: bool = True):
             )
             if cleans != "true" and sc.applicationId not in _CKPT_RETENTION_WARNED:
                 _CKPT_RETENTION_WARNED.add(sc.applicationId)
-                import warnings
-
                 warnings.warn(
                     "reliable checkpointing is active but "
                     "spark.cleaner.referenceTracking.cleanCheckpoints is "
@@ -134,6 +146,20 @@ def lineage_cut(df, eager: bool = True):
                 )
         return df.checkpoint(eager=eager)
     return df.localCheckpoint(eager=eager)
+
+
+def collect_if_small(df, limit: int):
+    """The hybrid-tail probe: ``df`` as a pandas frame when it has at
+    most ``limit`` rows, else ``None`` (the caller goes distributed).
+    One limit-bounded Arrow collect is both the branch decision and the
+    driver transfer. Exact: ``limit(limit + 1)`` keeps min(rows,
+    limit + 1) rows, so on the inline branch nothing was truncated.
+    Rows arrive in partition order, and no caller's result depends on
+    it: union-find roots are order-free, the Louvain tail sorts first.
+    A lazy cut that ``df`` reads is materialized by this same call (its
+    doCheckpoint backfills the partitions the limit skipped)."""
+    pdf = df.limit(limit + 1).toPandas()
+    return pdf if len(pdf) <= limit else None
 
 
 def fan_out(df, parts: int | None = None):
@@ -169,6 +195,11 @@ def fan_out(df, parts: int | None = None):
     return df.repartition(target)
 
 
+#: the sort-shuffle-writer setting get_spark builds every session with
+#: (see the comment at its .config call)
+BYPASS_MERGE_THRESHOLD = "1"
+
+
 def get_spark(
     app_name: str = "louvain-modularity-spark",
     master: str | None = None,
@@ -181,11 +212,9 @@ def get_spark(
     splitting) and a shuffle partition count sized so post-shuffle
     partitions are ~128-256 MB. Locally we default to the CPU count.
     """
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
+    cpus = env_int("SPARK_GRAFT_CPUS", os.cpu_count() or 4)
     master = master or f"local[{cpus}]"
-    shuffle = shuffle_partitions or int(
-        os.environ.get("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus)
-    )
+    shuffle = shuffle_partitions or cpus
     builder = (
         SparkSession.builder.appName(app_name)
         .master(master)
@@ -214,10 +243,7 @@ def get_spark(
         # used it anyway; the sort writer writes 2 files per map task
         # at every scale. Core conf (not runtime-settable), so it is
         # parameterised here at session build.
-        .config(
-            "spark.shuffle.sort.bypassMergeThreshold",
-            os.environ.get("SPARK_GRAFT_BYPASS_MERGE_THRESHOLD", "1"),
-        )
+        .config("spark.shuffle.sort.bypassMergeThreshold", BYPASS_MERGE_THRESHOLD)
     )
     spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("ERROR")
@@ -225,16 +251,13 @@ def get_spark(
     # ALREADY-RUNNING session (r20 ADVICE): surface the one perf-
     # relevant case — the A/B'd sort-shuffle-writer setting — instead
     # of depending on it without a signal
-    expected = os.environ.get("SPARK_GRAFT_BYPASS_MERGE_THRESHOLD", "1")
     actual = spark.sparkContext.getConf().get(
         "spark.shuffle.sort.bypassMergeThreshold", "200"
     )
-    if actual != expected:
-        import warnings
-
+    if actual != BYPASS_MERGE_THRESHOLD:
         warnings.warn(
             "spark.shuffle.sort.bypassMergeThreshold is "
-            f"{actual} (wanted {expected}): get_spark attached to an "
+            f"{actual} (wanted {BYPASS_MERGE_THRESHOLD}): get_spark attached to an "
             "existing JVM session, so the sort-shuffle-writer setting "
             "was not applied; small-shuffle latency may regress.",
             stacklevel=2,

@@ -86,12 +86,8 @@ def _state_parts_for(spark: SparkSession, input_bytes: int) -> int:
     so per-key state work stays parallel (1 partition serialized the
     flatMapGroupsWithState query 3.5×), capped at the session value —
     which is exactly what a 100 TB source resolves to (splits ≫
-    session), leaving the cluster-scale plan untouched. Env override:
-    SPARK_GRAFT_STREAM_STATE_PARTITIONS."""
-    override = os.environ.get("SPARK_GRAFT_STREAM_STATE_PARTITIONS")
+    session), leaving the cluster-scale plan untouched."""
     session = int(spark.conf.get("spark.sql.shuffle.partitions"))
-    if override:
-        return max(1, min(session, int(override)))
     raw = spark.conf.get("spark.sql.files.maxPartitionBytes", "134217728")
     try:
         max_bytes = int(str(raw).lower().rstrip("b")) or 134217728

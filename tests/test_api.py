@@ -150,6 +150,43 @@ def test_lineage_cut_checkpoint_retention_guard(spark, tmp_path, monkeypatch):
         spark.conf.unset("spark.graft.checkpointDir")
 
 
+def test_collect_if_small_boundary(spark):
+    """The hybrid-tail probe at its threshold: exactly ``limit`` rows
+    come back inline and intact, ``limit + 1`` rows send the caller
+    distributed (None), and an empty frame is an empty inline result,
+    not None."""
+    from louvain_modularity_spark.session import collect_if_small
+
+    df = spark.range(0, 50, 1, 4).toDF("id")
+    pdf = collect_if_small(df, 50)
+    assert sorted(pdf["id"].tolist()) == list(range(50))
+    assert collect_if_small(df, 49) is None
+    empty = collect_if_small(df.filter("id < 0"), 10)
+    assert empty is not None and len(empty) == 0
+    assert list(empty.columns) == ["id"]
+
+
+def test_env_int_malformed_value_warns_and_defaults(monkeypatch):
+    """A malformed integer knob falls back to its default with a
+    warning instead of crashing; unset/empty reads the default
+    silently and a valid value is used."""
+    import warnings
+
+    from louvain_modularity_spark.session import env_int
+
+    monkeypatch.setenv("SPARK_GRAFT_CPUS", "abc")
+    with pytest.warns(UserWarning, match="SPARK_GRAFT_CPUS"):
+        assert env_int("SPARK_GRAFT_CPUS", 3) == 3
+    with warnings.catch_warnings():
+        warnings.simplefilter("error")
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", "6")
+        assert env_int("SPARK_GRAFT_CPUS", 3) == 6
+        monkeypatch.setenv("SPARK_GRAFT_CPUS", "")
+        assert env_int("SPARK_GRAFT_CPUS", 3) == 3
+        monkeypatch.delenv("SPARK_GRAFT_CPUS")
+        assert env_int("SPARK_GRAFT_CPUS", 3) == 3
+
+
 def test_fan_out_gate_and_row_multiset(spark):
     """fan_out (r19): below the core count it round-robins the scan up
     to defaultParallelism and preserves the row MULTISET exactly (incl.

@@ -883,37 +883,33 @@ def test_approx_cd_linear_counting_regime(spark):
     assert got_adv == math.floor(lc + 0.5), (got_adv, lc)
 
 
-def test_dup_clusters_inline_matches_distributed(spark):
-    """The union-find inline tail of q_dup_clusters must produce the
-    same min-id components as the distributed CC path on the same
-    dup-pair graph."""
-    import pyspark.sql.functions as FF
+def test_dup_clusters_inline_matches_distributed(spark, monkeypatch):
+    """q_dup_clusters' own two branches agree: the in-driver union-find
+    tail (default DUP_INLINE_EDGES) and, with the threshold forced to
+    0, the distributed connected_components branch give the same
+    (doc_id, cluster, keep) rows."""
+    import louvain_modularity_spark.pipeline as P
 
-    from louvain_modularity_spark.llm_ops import ngram_jaccard_pairs
-    from louvain_modularity_spark.louvain import connected_components
-    from louvain_modularity_spark.pipeline import DUP_JACCARD, q_dup_clusters
-    from louvain_modularity_spark.sources import load
-
-    got = {
-        r["doc_id"]: (r["cluster"], r["keep"])
-        for r in q_dup_clusters(spark, "/root/testdata/sf0.001").collect()
-    }
-    edges = (
-        ngram_jaccard_pairs(load(spark, "/root/testdata/sf0.001", "documents"))
-        .filter(FF.col("jaccard") >= DUP_JACCARD)
-        .select(
-            FF.col("doc_a").alias("src"),
-            FF.col("doc_b").alias("dst"),
-            FF.lit(1.0).alias("weight"),
+    def run():
+        return sorted(
+            map(tuple, P.q_dup_clusters(spark, "/root/testdata/sf0.001").collect())
         )
-    )
-    cc = {
-        r["id"]: r["component"]
-        for r in connected_components(spark, edges).collect()
-    }
-    assert any(c != d for d, (c, _) in got.items())  # clusters exist
-    for doc, comp in cc.items():
-        assert got[doc] == (comp, comp == doc), (doc, got[doc], comp)
+
+    cc, calls = P.connected_components, []
+
+    def spy(*a, **k):
+        calls.append(1)
+        return cc(*a, **k)
+
+    monkeypatch.setattr(P, "connected_components", spy)
+    inline = run()
+    assert not calls
+    monkeypatch.setattr(P, "DUP_INLINE_EDGES", 0)
+    distributed = run()
+    assert calls  # the distributed branch really ran
+    assert any(c != d for d, c, _ in inline)  # clusters exist
+    assert inline == distributed
+    assert all(k == (c == d) for d, c, k in inline)
 
 
 def test_approx_topk_matches_exact(spark):

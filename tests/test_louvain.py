@@ -247,6 +247,35 @@ def _union_find_components(edge_list):
     return {n: find(n) for n in parent}
 
 
+def test_min_id_components_matches_union_find_golden():
+    """The shared in-driver union-find (every hybrid tail's closer) vs
+    the independent golden: empty input, a self-loop, duplicate and
+    reversed pairs, ids above 2^40 and a random multi-component graph."""
+    import random
+
+    from louvain_modularity_spark.graph import min_id_components
+
+    big = 1 << 41
+    rng = random.Random(11)
+    cases = {
+        "empty": [],
+        "self_loop": [(5, 5)],
+        "dup_reversed": [(3, 1), (1, 3), (3, 1), (2, 3), (9, 8), (8, 9)],
+        "big_ids": [(big + 7, big + 2), (big + 2, 3), (big + 9, big + 8)],
+        "random": [(rng.randrange(0, 300), rng.randrange(0, 300)) for _ in range(200)],
+    }
+    for name, pairs in cases.items():
+        got = min_id_components([u for u, _ in pairs], [v for _, v in pairs])
+        assert got == _union_find_components(pairs), name
+    assert min_id_components([], []) == {}
+    assert min_id_components([5], [5]) == {5: 5}
+    assert min_id_components([big + 7, big + 2], [big + 2, 3]) == {
+        big + 7: 3,
+        big + 2: 3,
+        3: 3,
+    }
+
+
 def test_connected_components_match_union_find_golden(spark, monkeypatch):
     """Both CC implementations vs a pure-Python union-find golden,
     each exercised in the regime it exists for: min-id propagation
