@@ -3,7 +3,8 @@
 Each operator module exposes ``QUERIES: dict[name, fn(spark, sf_dir)
 -> DataFrame]`` and ``ORACLES: dict[name, duckdb_sql]`` (oracle absent
 → the driver runs its weaker rows-only check). This module merges
-them; ``__spark_entry__.py`` re-exports.
+them, leading the iteration order with the driver's correctness
+window; ``__spark_entry__.py`` re-exports.
 """
 
 from __future__ import annotations
@@ -54,21 +55,12 @@ def _modules():
 
 
 # Order matters: the correctness driver verifies the FIRST 50 entries of
-# all_queries(). Registry FROZEN at 302 queries for rounds 6-8 (the r5
-# verdict's top task): the 109 queries added in round 5 outpaced the
-# 50-slot window, so rounds 6-8 burn the never-windowed backlog to zero
-# before anything new is registered. The full three-round plan is pinned
-# below as data (_WINDOW_R06 / _WINDOW_R07 / _WINDOW_R08) and
-# held_queries() derives the outstanding set — no hand-synced prose list.
-# ROUND 20 STATUS: _WINDOW_R19 (pinned in round 19) is the ACTIVE
-# window; all_queries() leads with it. Rows-only pin: q_bpe_encode
-# (documented rejection, SURVEY §2.40). The 8 remaining r13-vintage
-# names, then the 42 alphabetically-first r14 greens — the oldest
-# driver rows in the registry after the r18 window ran
-# (CORRECTNESS_r19 = 48/48 oracle-backed hash-green + the 2 rows-only
-# pins). Backlog: NONE — held_queries() returns [].
-# _WINDOW_R20 below pins the next rotation, derived by
-# scripts/window_plan.py.
+# all_queries(), so WINDOW leads the iteration order and every other
+# name follows in module order. Rotation is mechanical: re-green the 50
+# names whose latest driver CORRECTNESS row is oldest (ties
+# alphabetical). To rotate, run `python scripts/window_plan.py`, paste
+# its 50 names into WINDOW, and set WINDOW_ROWS_ONLY to the pasted names
+# that have no oracle. Past windows live in CORRECTNESS_r*.json and git.
 #
 # Every oracle-backed entry is local DuckDB-parity green at
 # sf0.001+sf0.01 (tests/test_oracle_parity.py runs the driver's own
@@ -76,1004 +68,9 @@ def _modules():
 # (networkx k_truss / MSF, exact BPE merge list, numpy PCA, PQ recall
 # floor, from-scratch DBSCAN, Leiden invariants).
 
-# Rows-only-by-contract entries inside the R06 window (no DuckDB oracle;
-# each has a local golden): q_mst_boruvka (networkx MSF weight),
-# q_bpe_learn (exact pure-Python merge list). q_ktruss and
-# q_graph_coloring left this list in r12 with unrolled-CTE oracles
-# (graph._oracle_ktruss / graph._oracle_graph_coloring — unique peel
-# fixpoint; deterministic sync rounds over an inlined XXH64 table).
-_WINDOW_ROWS_ONLY = [
-    "q_mst_boruvka",
-    "q_bpe_learn",
-]
-
-# Round-6 window: 50 never-windowed round-5 additions, oracle-backed
-# §2.18-§2.20 first (the r5 verdict's priority list), plus the four
-# rows-only graph/BPE ops above.
-_WINDOW_R06 = [
-    # §2.18 scale-pattern rewrites + text buckets
-    "q_skyline",
-    "q_substring_dup",
-    "q_mode_agg",
-    "q_equi_depth_hist",
-    "q_gaps_islands",
-    "q_mad_outlier",
-    "q_window_cume",
-    "q_running_distinct",
-    "q_interval_overlap",
-    "q_ccnet_bucket",
-    "q_random_walk",
-    # §2.19 second batch
-    "q_markov_transitions",
-    "q_conductance",
-    "q_partition_nmi",
-    "q_hits",
-    "q_expectations",
-    "q_profile_columns",
-    "q_skew_stats",
-    "q_containment",
-    "q_bigram_lm",
-    "q_bloom_prefilter",
-    "q_attribution",
-    "q_fn_try",
-    "q_train_split",
-    "q_ab_ttest",
-    "q_session_paths",
-    "q_recursive_cte",
-    "q_gopher_quality",
-    "q_dsir_weights",
-    "q_label_noise",
-    "q_seasonal_baseline",
-    "q_target_encode",
-    "q_freq_pairs",
-    "q_reservoir_group",
-    "q_zorder_layout",
-    "q_incremental_agg",
-    "q_cdc_apply",
-    "q_stream_metrics",
-    # §2.20 third batch
-    "q_count_min",
-    "q_weighted_median",
-    "q_auc_rank",
-    "q_decayed_count",
-    "q_sorted_neighborhood",
-    "q_rfm",
-    "q_diff_snapshot",
-    "q_feature_hash",
-    # rows-only by contract (goldens in pytest)
-    "q_ktruss",
-    "q_graph_coloring",
-    "q_mst_boruvka",
-    "q_bpe_learn",
-]
-
-# Round-7 window, pinned in round 6 and EXECUTED in round 7 (active —
-# all_queries() leads with it): 46 oracle-backed + 4 rows-only
-# (q_dbscan, q_pca_power, q_pq_ann, q_bpe_encode).
-# Tie-hazard audit (r5 verdict #6, round 6): every row_number()/LIMIT
-# site across the 54 held oracles carries a deterministic total-order
-# tiebreak (secondary unique key, GROUP BY key, or DISTINCT-before-
-# LIMIT as in q_kmv_sketch); no q_gap_fill-class sf-dependent tie
-# found. q_dbscan left this list in r12: its one iterative step is an
-# exact recursive-CTE closure in DuckDB (tsml.ORACLE_DBSCAN).
-_WINDOW_R07_ROWS_ONLY = [
-    "q_pca_power",
-    "q_pq_ann",
-    "q_bpe_encode",
-]
-
-_WINDOW_R07 = [
-    "q_arrow_batch",
-    "q_stream_join_outer",
-    "q_stream_topk",
-    "q_window_nth",
-    "q_sql_pipe",
-    "q_url_parse",
-    "q_collation",
-    "q_topo_layers",
-    "q_rich_club",
-    "q_butterfly",
-    "q_interval_merge",
-    "q_cogroup_udf",
-    "q_e2e_curation",
-    "q_nested_prune",
-    "q_bin_pack",
-    "q_item_cf",
-    "q_read_xml",
-    "q_trend_fit",
-    "q_theilsen",
-    "q_autocorr",
-    "q_benford",
-    "q_temporal_graph",
-    "q_crosstab_chi2",
-    "q_null_imputation",
-    "q_one_hot",
-    "q_histogram_2d",
-    "q_neighbor_agg",
-    "q_graph_drift",
-    "q_bollinger",
-    "q_allocation",
-    "q_survivorship",
-    "q_pareto_abc",
-    "q_gini",
-    "q_kaplan_meier",
-    "q_cohort_ltv",
-    "q_assoc_rules",
-    "q_sketch_union",
-    "q_anova",
-    "q_spearman",
-    "q_mann_whitney",
-    "q_wilcoxon",
-    "q_quantile_normalize",
-    "q_kmv_sketch",
-    "q_ohlc_bars",
-    "q_ewma",
-    "q_cusum",
-    "q_dbscan",
-    "q_pca_power",
-    "q_pq_ann",
-    "q_bpe_encode",
-]
-
-# Round-8 lead: the final 9 never-windowed queries (8 oracle-backed +
-# rows-only q_leiden_refine).
-_WINDOW_R08_LEAD = [
-    "q_winsorize",
-    "q_grid_join",
-    "q_calibration",
-    "q_ndcg",
-    "q_ks_test",
-    "q_geo_density",
-    "q_rolling_median",
-    "q_mom_yoy",
-    "q_leiden_refine",
-]
-
-# Round-8 window, pinned NOW (r6 verdict task 5): the 9 backlog burns
-# above + 41 staleness-rotation slots re-verifying the OLDEST driver
-# greens. Rationale: after r7 the entire registry has driver evidence,
-# but the round-1/round-2 cohort's rows will be 5-6 rounds stale —
-# exactly the staleness class that hid the q_gap_fill encoding bug
-# until its r3 re-run. The rotation therefore re-windows every r1/r2
-# name (44 of them) except the three weakest-signal rows-only entries
-# (q_sample_hash, q_udf_pandas, q_stream_watermark — a driver re-run
-# would only repeat the rows>0 check their pytest goldens already
-# subsume; dropped to fit 50 slots). 31 of the 41 are oracle-backed
-# (full hash re-verification); 10 are rows-only flagship Louvain /
-# dedup / ANN ops where executes-under-driver freshness still matters.
-# Pre-verified in round 7: all 41 rotation names ran the driver's own
-# sf0.01 comparison (oracle hash or rows>0) with 0 failures — the r8
-# window starts from known-green state, so any r8 failure is a fresh
-# regression, not accumulated rot.
-_WINDOW_R08_ROTATION = [
-    # r1 greens (oldest rows in any CORRECTNESS file)
-    "q_histogram",
-    "q_approx_quantile",
-    # r2 greens: llm_ops cohort
-    "q_text_tokens",
-    "q_token_count",
-    "q_tfidf",
-    "q_lang_stats",
-    "q_lang_id",
-    "q_quality_score",
-    "q_dedup_doc_exact",
-    "q_ngram_jaccard",
-    "q_sim_topk",
-    "q_knn_label",
-    "q_ann_ivf",
-    "q_dup_embedding",
-    "q_sample_stratified",
-    "q_data_mix",
-    "q_dedup_minhash",
-    "q_simhash",
-    "q_ann_lsh",
-    # r2 greens: louvain cohort (flagship — freshness matters most)
-    "q_neighbor_com_weights",
-    "q_com_totals",
-    "q_delta_q",
-    "q_delta_q_directed",
-    "q_best_move",
-    "q_connected_components",
-    "q_louvain_directed",
-    "q_louvain_one_level",
-    "q_louvain_communities",
-    "q_louvain_distributed",
-    "q_louvain_dendrogram",
-    "q_seeded_order",
-    "q_label_propagation",
-    # r2 greens: metrics cohort
-    "q_modularity",
-    "q_modularity_directed",
-    "q_resolution_sweep",
-    "q_is_partition",
-    "q_intra_inter_edges",
-    "q_partition_quality",
-    # r2 greens: multimodal cohort
-    "q_multimodal_meta",
-    "q_multimodal_features",
-    "q_frame_sample",
-]
-
-_WINDOW_R08 = _WINDOW_R08_LEAD + _WINDOW_R08_ROTATION
-
-# Rows-only-by-contract entries inside the R08 window (no DuckDB
-# oracle; every one carries a local golden or invariant test):
-# q_leiden_refine (Leiden invariants vs the Louvain partition), the
-# r1 q_approx_quantile (bounded-error contract vs exact quantiles),
-# and the r2 dedup/ANN/Louvain iterative cohort whose outputs are
-# seed-deterministic but not SQL-expressible.
-_WINDOW_R08_ROWS_ONLY = [
-    "q_leiden_refine",
-    "q_approx_quantile",
-    "q_dedup_minhash",
-    "q_simhash",
-    "q_ann_lsh",
-    "q_louvain_directed",
-    "q_louvain_one_level",
-    "q_louvain_communities",
-    "q_louvain_distributed",
-    "q_louvain_dendrogram",
-    "q_seeded_order",
-    "q_label_propagation",
-]
-
-# Round-9 window, pinned NOW (same one-round-ahead convention as
-# _WINDOW_R07/_WINDOW_R08): lead = the round-8 unfreeze batch
-# (SURVEY §2.31 — the five Python Data Source queries, four
-# oracle-backed + q_pyds_stream ALSO oracle-backed, so five SQL✓),
-# then a 45-slot staleness rotation clearing the next-oldest driver
-# evidence: the three r2 rows-only names deliberately dropped from the
-# r8 rotation (their goldens subsume the rows>0 check, but after r8
-# they become the oldest rows in any CORRECTNESS file) plus 42 of the
-# 49 r3 greens (alphabetical; the remaining 7 lead the r10 rotation).
-_WINDOW_R09_LEAD = [
-    "q_pyds_read",
-    "q_pyds_pushdown",
-    "q_pyds_arrow_read",
-    "q_pyds_write",
-    "q_pyds_stream",
-]
-
-_WINDOW_R09_ROTATION = [
-    # oldest tier: r2 rows-only, skipped by the r8 rotation
-    "q_sample_hash",
-    "q_stream_watermark",
-    "q_udf_pandas",
-    # r3 greens, alphabetical, first 42 of 49
-    "q_adamic_adar",
-    "q_assortativity",
-    "q_betweenness",
-    "q_bfs_hops",
-    "q_bm25",
-    "q_chunk_sliding",
-    "q_closeness",
-    "q_clustering_coeff",
-    "q_contamination",
-    "q_degree_dist",
-    "q_doc_fingerprint",
-    "q_dup_clusters",
-    "q_eigenvector",
-    "q_embedding_centroid",
-    "q_embedding_normalize",
-    "q_funnel",
-    "q_fuzzy_join",
-    "q_jaccard_nodes",
-    "q_join_bucketed",
-    "q_kmeans",
-    "q_length_filter",
-    "q_merge_upsert",
-    "q_ngram_counts",
-    "q_pack_sequences",
-    "q_personalized_pagerank",
-    "q_pii_scrub",
-    "q_repetition_ratio",
-    "q_retention_cohort",
-    "q_rollup_time",
-    "q_salted_join",
-    "q_scc",
-    "q_scd2_intervals",
-    "q_sessionize",
-    "q_sssp_weighted",
-    "q_stopword_remove",
-    "q_stream_file_sink",
-    "q_stream_foreach_batch",
-    "q_token_vocab",
-    "q_tpch_q10",
-    "q_tpch_q17",
-    "q_tpch_q18",
-    "q_tpch_q3",
-]
-
-_WINDOW_R09 = _WINDOW_R09_LEAD + _WINDOW_R09_ROTATION
-
-# Rows-only-by-contract entries inside the R09 window. Originally the
-# three r2 names; round 10 upgraded two of them to value-exact DuckDB
-# oracles (q_sample_hash now selects via the q_data_mix Knuth-hash
-# scramble — engine-parity integer arithmetic instead of engine-side
-# xxhash64; q_udf_pandas gained a list_sum norm recomputation whose
-# constant diff column asserts the UDF-vs-builtin cross-check), so only
-# the event-time watermark drop — whose output genuinely depends on
-# batch boundaries — remains rows-only. Everything else in the window,
-# including all five pyds leads, is oracle-backed SQL.
-_WINDOW_R09_ROWS_ONLY = [
-    "q_stream_watermark",
-]
-
-# Round-10 window, pinned NOW (same one-round-ahead convention):
-# rotation-only — no new registrations this round (the §2.32 unfreeze
-# re-probe found spark-avro / transformWithState still environment-
-# gated; receipts in SURVEY.md §2.32) — clearing the next-stalest
-# driver evidence: the 7 r3 greens the r9 rotation's alphabetical cut
-# left over, then the 43 alphabetically-first of the 50 r4 greens (the
-# remaining 7 r4 names lead the r11 rotation).
-_WINDOW_R10 = [
-    # r3 remainder (last 7 of the 49, alphabetical)
-    "q_tpch_q4",
-    "q_triangle_count",
-    "q_udtf_tokens",
-    "q_unigram_surprise",
-    "q_unpivot_metrics",
-    "q_write_partitioned",
-    "q_zscore_outlier",
-    # r4 greens, alphabetical, first 43 of 50
-    "q_approx_topk",
-    "q_bipartite_project",
-    "q_entropy_tokens",
-    "q_filtered_agg",
-    "q_fn_date",
-    "q_fn_json",
-    "q_fn_map",
-    "q_fn_variant",
-    "q_gap_fill",
-    "q_harmonic_centrality",
-    "q_hll_sketch",
-    "q_join_asof",
-    "q_join_theta_range",
-    "q_kcore",
-    "q_latest_per_key",
-    "q_pagerank",
-    "q_pmi_cooccur",
-    "q_read_csv",
-    "q_read_json",
-    "q_read_orc",
-    "q_read_text_log",
-    "q_robust_scale",
-    "q_rolling_7d",
-    "q_semdedup",
-    "q_stats_agg",
-    "q_stream_dedup",
-    "q_stream_session",
-    "q_stream_sliding",
-    "q_stream_stateful_count",
-    "q_stream_static_join",
-    "q_stream_stream_join",
-    "q_stream_tumbling",
-    "q_string_agg",
-    "q_time_weighted_avg",
-    "q_tpch_q1",
-    "q_tpch_q12",
-    "q_tpch_q13",
-    "q_tpch_q14",
-    "q_tpch_q15",
-    "q_tpch_q19",
-    "q_tpch_q2",
-    "q_tpch_q21",
-    "q_tpch_q22",
-]
-
-# Rows-only-by-contract entries inside the R10 window: the HLL sketch
-# (engine-specific estimates, error-bound pytest check) — not
-# SQL-expressible exactly. q_approx_topk left this list in the r10
-# oracle-upgrade batch: with maxItemsTracked ≫ vocab the sketch is
-# exact and the rank-20/21 boundary is tie-free at every fixture (gap
-# asserted in tests/test_coverage.py so drift fails locally, never at
-# the driver). q_kcore left in r12: the peel fixpoint is unique and
-# the peel step idempotent there, so the fixed fixture admits an
-# unrolled-CTE oracle (graph._oracle_kcore).
-_WINDOW_R10_ROWS_ONLY = [
-    "q_hll_sketch",
-]
-
-# Round-11 window, pinned NOW (same one-round-ahead convention),
-# derived by scripts/window_plan.py WITH the r10-verdict-task-2 rule:
-# an oracle upgrade resets staleness, so the three names whose
-# value-exact oracles (SURVEY §2.33, parity_hash32 batch) landed AFTER
-# their last driver row lead — their r9 rows are no_oracle and the
-# contract's hard rows+schema+hash signal has never run for them.
-# Then the staleness rotation proper: the 7 remaining r4 greens and
-# 40 alphabetically-first r5 greens. Rotation-only — the §2.34 r11
-# unfreeze re-probe found spark-avro / protobuf still absent
-# (receipts in SURVEY.md §2.34); registry stays at 307.
-_WINDOW_R11 = [
-    # oracle-upgraded in r10, never driver-hash-checked (maximal
-    # staleness under the window_plan.py ORACLE_UPGRADED rule)
-    "q_ann_lsh",
-    "q_dedup_minhash",
-    "q_simhash",
-    # r4 remainder (last 7 of the 50, alphabetical)
-    "q_tpch_q5",
-    "q_tpch_q6",
-    "q_tpch_q7",
-    "q_tpch_q8",
-    "q_window_laglead",
-    "q_window_ntile",
-    "q_write_shards",
-    # r5 greens, alphabetical, first 40
-    "q_adjacency_pivot",
-    "q_agg_distinct",
-    "q_agg_groupby",
-    "q_approx_cd",
-    "q_betweenness_sampled",
-    "q_coarsen_edges",
-    "q_cross_small",
-    "q_cube",
-    "q_dedup_exact",
-    "q_default_weight",
-    "q_degree_inout",
-    "q_degree_weighted",
-    "q_eccentricity",
-    "q_edge_agg_parallel",
-    "q_edges_from_relational",
-    "q_filter_pred",
-    "q_fn_array",
-    "q_fn_cond",
-    "q_fn_math",
-    "q_fn_string",
-    "q_fn_struct",
-    "q_graph_size_m",
-    "q_grouping_sets",
-    "q_grouping_sets_explicit",
-    "q_join_broadcast",
-    "q_join_full_outer",
-    "q_join_inner",
-    "q_join_outer",
-    "q_join_semi_anti",
-    "q_lateral_topk",
-    "q_membership_rollup",
-    "q_null_semantics",
-    "q_pivot_status",
-    "q_quantiles",
-    "q_read_edgelist",
-    "q_read_merge_schema",
-    "q_scan_parquet",
-    "q_selfloop_filter",
-    "q_set_ops",
-    "q_sort_limit",
-]
-
-# Rows-only-by-contract entries inside the R11 window: the sampled
-# approximate closeness/diameter sketch (seed-order dependent) and
-# sampled Brandes betweenness (source-sample dependent) — neither
-# SQL-expressible exactly; both carry networkx-golden pytest evidence.
-# q_betweenness_sampled left this list in r12 — the engine's own
-# level-synchronous Brandes shape unrolls polynomially in SQL
-# (graph._oracle_betweenness_sampled), unlike the exact oracle's
-# walk-enumeration identity — so the ACTIVE window now hash-checks it.
-# (q_approx_cd left this list in r13: at fixture cardinality the
-# HLL++ estimate is pure linear counting, re-expressed exactly as
-# _oracle_approx_cd — so the pin is now empty. Kept for the r11
-# historical shape assertions.)
-_WINDOW_R11_ROWS_ONLY: list = []
-
-# Round-12 window, pinned NOW (same one-round-ahead convention),
-# derived by scripts/window_plan.py: q_butterfly_sampled — the ONE
-# r12 registration (the r11-verdict-task-6 sampled twin of
-# q_butterfly, oracle-backed because its hash-deterministic edge
-# sample reproduces bit-identically in DuckDB) — leads under the
-# never-windowed rule, tied with the seven §2.37 oracle-upgraded
-# names whose r12 upgrades reset their staleness (window_plan
-# ORACLE_UPGRADED rule — their rows-only driver rows pre-date the
-# oracles; the eighth upgrade, q_betweenness_sampled, sits in the
-# ACTIVE r11 window), then pure round-vintage staleness: the 10
-# remaining r5 greens and the 32 alphabetically-first r6 greens.
-# Otherwise rotation-only — the §2.36 r12 unfreeze re-probe receipts
-# are in SURVEY.md; registry grows 307 → 308 (294 SQL✓ after the
-# §2.37 upgrade batch).
-_WINDOW_R12 = [
-    # never driver-windowed: registered r12 (sampled butterfly twin)
-    "q_butterfly_sampled",
-    # oracle-upgraded r12 (unrolled-peel / unrolled-round CTEs, the
-    # recursive-CTE dbscan closure, and the HUGEINT XXH64 chain):
-    # latest driver rows are rows-only, so they sort maximally stale
-    # until hash-checked
-    "q_dbscan",
-    "q_graph_coloring",
-    "q_kcore",
-    "q_ktruss",
-    "q_label_propagation",
-    "q_louvain_one_level",
-    "q_seeded_order",
-    # r5 remainder (last 10 of the 50, alphabetical)
-    "q_subquery_scalar",
-    "q_symmetrize",
-    "q_tpch_q11",
-    "q_tpch_q16",
-    "q_tpch_q20",
-    "q_tpch_q9",
-    "q_union_by_name",
-    "q_window_frame",
-    "q_window_rank",
-    "q_write_edgelist",
-    # r6 greens, alphabetical, first 32 (1 new + 7 upgraded + 10 r5 + 32 = 50)
-    "q_ab_ttest",
-    "q_attribution",
-    "q_auc_rank",
-    "q_bigram_lm",
-    "q_bloom_prefilter",
-    "q_bpe_learn",
-    "q_ccnet_bucket",
-    "q_cdc_apply",
-    "q_conductance",
-    "q_containment",
-    "q_count_min",
-    "q_decayed_count",
-    "q_diff_snapshot",
-    "q_dsir_weights",
-    "q_equi_depth_hist",
-    "q_expectations",
-    "q_feature_hash",
-    "q_fn_try",
-    "q_freq_pairs",
-    "q_gaps_islands",
-    "q_gopher_quality",
-    "q_hits",
-    "q_incremental_agg",
-    "q_interval_overlap",
-    "q_label_noise",
-    "q_mad_outlier",
-    "q_markov_transitions",
-    "q_mode_agg",
-    "q_mst_boruvka",
-    "q_partition_nmi",
-    "q_profile_columns",
-    "q_random_walk",
-]
-
-# Rows-only-by-contract entries inside the R12 window: BPE merge
-# learning (iteration-order dependent) and Borůvka MSF (networkx
-# golden) — neither SQL-expressible exactly; both carry
-# golden/invariant pytest evidence. q_ktruss / q_graph_coloring left
-# this list in r12: the truss peel fixpoint is unique and the
-# Jones–Plassmann rounds are deterministic on the fixed fixture, so
-# both gained unrolled-CTE oracles (graph._oracle_ktruss /
-# graph._oracle_graph_coloring) alongside q_kcore and q_dbscan.
-_WINDOW_R12_ROWS_ONLY = [
-    "q_bpe_learn",
-    "q_mst_boruvka",
-]
-
-# Round-13 window, pinned NOW (same one-round-ahead convention),
-# derived by scripts/window_plan.py: rotation-only — no r13
-# registrations — led by the TWO mid-round-13 oracle upgrades (SURVEY
-# §2.40: q_pq_ann's Lloyd unroll; q_stream_watermark's calibrated
-# watermark cut), whose value-exact oracles postdate their last
-# driver rows so the upgrade rule sorts them maximally stale, then 16
-# remaining r6 greens + 31 alphabetically-first r7 greens. q_pq_ann
-# was already in the set by r7 staleness; admitting
-# q_stream_watermark displaced the alphabetically-last r7 entry
-# (q_quantile_normalize, hash-green since r7, rotates next). Both
-# upgrades get their first rows+schema+hash driver rows in r14.
-_WINDOW_R13 = [
-    # oracle-upgraded mid-r13 (rows-only driver rows predate the oracles)
-    "q_approx_cd",
-    "q_pq_ann",
-    "q_stream_watermark",
-    # r6 remainder (last 16 of the 50, alphabetical)
-    "q_recursive_cte",
-    "q_reservoir_group",
-    "q_rfm",
-    "q_running_distinct",
-    "q_seasonal_baseline",
-    "q_session_paths",
-    "q_skew_stats",
-    "q_skyline",
-    "q_sorted_neighborhood",
-    "q_stream_metrics",
-    "q_substring_dup",
-    "q_target_encode",
-    "q_train_split",
-    "q_weighted_median",
-    "q_window_cume",
-    "q_zorder_layout",
-    # r7 greens, alphabetical, first 31 (3 + 16 + 31 = 50)
-    "q_allocation",
-    "q_anova",
-    "q_arrow_batch",
-    "q_assoc_rules",
-    "q_autocorr",
-    "q_benford",
-    "q_bin_pack",
-    "q_bollinger",
-    "q_bpe_encode",
-    "q_butterfly",
-    "q_cogroup_udf",
-    "q_cohort_ltv",
-    "q_collation",
-    "q_crosstab_chi2",
-    "q_cusum",
-    "q_e2e_curation",
-    "q_ewma",
-    "q_gini",
-    "q_graph_drift",
-    "q_histogram_2d",
-    "q_interval_merge",
-    "q_item_cf",
-    "q_kaplan_meier",
-    "q_kmv_sketch",
-    "q_mann_whitney",
-    "q_neighbor_agg",
-    "q_nested_prune",
-    "q_null_imputation",
-    "q_ohlc_bars",
-    "q_one_hot",
-    "q_pareto_abc",
-]
-
-# Rows-only-by-contract entries inside the R13 window: BPE encoding
-# (depends on the driver-sequenced merge list), declared since its
-# registration round. (q_pq_ann left this list in r13 — its Lloyd
-# training unrolled as the _oracle_pq_ann CTE chain; q_pca_power left
-# the WINDOW when the third r13 upgrade, q_approx_cd, took a lead
-# slot — it rotates next round with its numpy-eigh reason intact.)
-_WINDOW_R13_ROWS_ONLY = [
-    "q_bpe_encode",
-]
-
-# Round-14 window, pinned NOW (same one-round-ahead convention),
-# derived by scripts/window_plan.py: rotation-only — no r14
-# registrations and no mid-r14 oracle upgrades at pin time — pure
-# round-vintage staleness: the 17 remaining r7 greens (q_pca_power,
-# displaced from the r13 lead by q_approx_cd, rotates here with its
-# numpy-eigh rows-only reason intact; q_quantile_normalize, displaced
-# alphabetically in r13 by the q_stream_watermark upgrade, leads the
-# r7 tail) + the 33 alphabetically-first r9 names.
-_WINDOW_R14 = [
-    # r7 remainder (last 17 of the 50, alphabetical)
-    "q_pca_power",
-    "q_quantile_normalize",
-    "q_read_xml",
-    "q_rich_club",
-    "q_sketch_union",
-    "q_spearman",
-    "q_sql_pipe",
-    "q_stream_join_outer",
-    "q_stream_topk",
-    "q_survivorship",
-    "q_temporal_graph",
-    "q_theilsen",
-    "q_topo_layers",
-    "q_trend_fit",
-    "q_url_parse",
-    "q_wilcoxon",
-    "q_window_nth",
-    # r9 greens, alphabetical, first 33 (17 + 33 = 50)
-    "q_ann_ivf",
-    "q_approx_quantile",
-    "q_best_move",
-    "q_calibration",
-    "q_com_totals",
-    "q_connected_components",
-    "q_data_mix",
-    "q_dedup_doc_exact",
-    "q_delta_q",
-    "q_delta_q_directed",
-    "q_dup_embedding",
-    "q_frame_sample",
-    "q_geo_density",
-    "q_grid_join",
-    "q_histogram",
-    "q_intra_inter_edges",
-    "q_is_partition",
-    "q_knn_label",
-    "q_ks_test",
-    "q_lang_id",
-    "q_lang_stats",
-    "q_leiden_refine",
-    "q_louvain_communities",
-    "q_louvain_dendrogram",
-    "q_louvain_directed",
-    "q_louvain_distributed",
-    "q_modularity",
-    "q_modularity_directed",
-    "q_mom_yoy",
-    "q_multimodal_features",
-    "q_multimodal_meta",
-    "q_ndcg",
-    "q_neighbor_com_weights",
-]
-
-# Rows-only-by-contract entries inside the R14 window: the Louvain
-# family's in-driver sequential tails at oracle scales
-# (inline_threshold 50k > the sf0.01 graph), PCA's numpy-eigh golden
-# (eigengap λ2/λ1 ≈ 0.987 → ~1800 power steps, not unrollable), and
-# approx_quantile (GK compress/merge internals are merge-order
-# sensitive — r14 re-probe receipt in SURVEY §2.42). Each carries
-# golden/invariant pytest evidence.
-_WINDOW_R14_ROWS_ONLY = [
-    "q_approx_quantile",
-    "q_leiden_refine",
-    "q_louvain_communities",
-    "q_louvain_dendrogram",
-    "q_louvain_directed",
-    "q_louvain_distributed",
-    "q_pca_power",
-]
-
-# Round-15 window, pinned in round 15 (derived by
-# scripts/window_plan.py after _WINDOW_R14 went active): rotation-only
-# re-greens — the 11 remaining r9-vintage names (alphabetically after
-# the 33 the r14 window took), then the 39 alphabetically-first
-# r10-vintage names. Every entry is oracle-backed: the rows-only pin
-# below is EMPTY for the first time since the windows began.
-_WINDOW_R15 = [
-    # r9 remainder (last 11 of the r9 cohort, alphabetical)
-    "q_ngram_jaccard",
-    "q_partition_quality",
-    "q_quality_score",
-    "q_resolution_sweep",
-    "q_rolling_median",
-    "q_sample_stratified",
-    "q_sim_topk",
-    "q_text_tokens",
-    "q_tfidf",
-    "q_token_count",
-    "q_winsorize",
-    # r10 greens, alphabetical, first 39 (11 + 39 = 50)
-    "q_adamic_adar",
-    "q_assortativity",
-    "q_betweenness",
-    "q_bfs_hops",
-    "q_bm25",
-    "q_chunk_sliding",
-    "q_closeness",
-    "q_clustering_coeff",
-    "q_contamination",
-    "q_degree_dist",
-    "q_doc_fingerprint",
-    "q_dup_clusters",
-    "q_eigenvector",
-    "q_embedding_centroid",
-    "q_embedding_normalize",
-    "q_funnel",
-    "q_fuzzy_join",
-    "q_jaccard_nodes",
-    "q_join_bucketed",
-    "q_kmeans",
-    "q_length_filter",
-    "q_merge_upsert",
-    "q_ngram_counts",
-    "q_pack_sequences",
-    "q_personalized_pagerank",
-    "q_pii_scrub",
-    "q_pyds_arrow_read",
-    "q_pyds_pushdown",
-    "q_pyds_read",
-    "q_pyds_stream",
-    "q_pyds_write",
-    "q_repetition_ratio",
-    "q_retention_cohort",
-    "q_rollup_time",
-    "q_salted_join",
-    "q_sample_hash",
-    "q_scc",
-    "q_scd2_intervals",
-    "q_sessionize",
-]
-
-# Rows-only-by-contract entries inside the R15 window: NONE — all 50
-# names carry value-exact DuckDB oracles.
-_WINDOW_R15_ROWS_ONLY: list[str] = []
-
-# Round-16 window, pinned in round 16 (derived by
-# scripts/window_plan.py after _WINDOW_R15 went active): rotation-only
-# re-greens — the 10 remaining r10-vintage names (alphabetically after
-# the 39 the r15 window took), then the 40 alphabetically-first
-# r11-vintage names. One rows-only entry: q_hll_sketch (oracle REJECTED
-# with a measured receipt, SURVEY §2.33 — coupon-collision landmine).
-_WINDOW_R16 = [
-    # r10 remainder (last 10 of the r10 cohort, alphabetical)
-    "q_sssp_weighted",
-    "q_stopword_remove",
-    "q_stream_file_sink",
-    "q_stream_foreach_batch",
-    "q_token_vocab",
-    "q_tpch_q10",
-    "q_tpch_q17",
-    "q_tpch_q18",
-    "q_tpch_q3",
-    "q_udf_pandas",
-    # r11 greens, alphabetical, first 40 (10 + 40 = 50)
-    "q_approx_topk",
-    "q_bipartite_project",
-    "q_entropy_tokens",
-    "q_filtered_agg",
-    "q_fn_date",
-    "q_fn_json",
-    "q_fn_map",
-    "q_fn_variant",
-    "q_gap_fill",
-    "q_harmonic_centrality",
-    "q_hll_sketch",
-    "q_join_asof",
-    "q_join_theta_range",
-    "q_latest_per_key",
-    "q_pagerank",
-    "q_pmi_cooccur",
-    "q_read_csv",
-    "q_read_json",
-    "q_read_orc",
-    "q_read_text_log",
-    "q_robust_scale",
-    "q_rolling_7d",
-    "q_semdedup",
-    "q_stats_agg",
-    "q_stream_dedup",
-    "q_stream_session",
-    "q_stream_sliding",
-    "q_stream_stateful_count",
-    "q_stream_static_join",
-    "q_stream_stream_join",
-    "q_stream_tumbling",
-    "q_string_agg",
-    "q_time_weighted_avg",
-    "q_tpch_q1",
-    "q_tpch_q12",
-    "q_tpch_q13",
-    "q_tpch_q14",
-    "q_tpch_q15",
-    "q_tpch_q19",
-    "q_tpch_q2",
-]
-
-# Rows-only-by-contract entries inside the R16 window: q_hll_sketch
-# only (HLL++ register-layout sketch; the exact-regime oracle was
-# REJECTED in r14 with a measured coupon-collision receipt).
-_WINDOW_R16_ROWS_ONLY = [
-    "q_hll_sketch",
-]
-
-# Round-17 window, pinned in round 17 (derived by
-# scripts/window_plan.py after _WINDOW_R16 went active): rotation-only
-# re-greens — the 9 remaining r11-vintage names (alphabetically after
-# the 40 the r16 window took), then the 41 alphabetically-first
-# r12-vintage names. Rows-only entries: NONE — all 50 names carry
-# value-exact DuckDB oracles.
-_WINDOW_R17 = [
-    # r11 remainder (last 9 of the r11 cohort, alphabetical)
-    "q_tpch_q21",
-    "q_tpch_q22",
-    "q_tpch_q4",
-    "q_triangle_count",
-    "q_udtf_tokens",
-    "q_unigram_surprise",
-    "q_unpivot_metrics",
-    "q_write_partitioned",
-    "q_zscore_outlier",
-    # r12 greens, alphabetical, first 41 (9 + 41 = 50)
-    "q_adjacency_pivot",
-    "q_agg_distinct",
-    "q_agg_groupby",
-    "q_ann_lsh",
-    "q_betweenness_sampled",
-    "q_coarsen_edges",
-    "q_cross_small",
-    "q_cube",
-    "q_dedup_exact",
-    "q_dedup_minhash",
-    "q_default_weight",
-    "q_degree_inout",
-    "q_degree_weighted",
-    "q_eccentricity",
-    "q_edge_agg_parallel",
-    "q_edges_from_relational",
-    "q_filter_pred",
-    "q_fn_array",
-    "q_fn_cond",
-    "q_fn_math",
-    "q_fn_string",
-    "q_fn_struct",
-    "q_graph_size_m",
-    "q_grouping_sets",
-    "q_grouping_sets_explicit",
-    "q_join_broadcast",
-    "q_join_full_outer",
-    "q_join_inner",
-    "q_join_outer",
-    "q_join_semi_anti",
-    "q_lateral_topk",
-    "q_membership_rollup",
-    "q_null_semantics",
-    "q_pivot_status",
-    "q_quantiles",
-    "q_read_edgelist",
-    "q_read_merge_schema",
-    "q_scan_parquet",
-    "q_selfloop_filter",
-    "q_set_ops",
-    "q_simhash",
-]
-
-# Rows-only-by-contract entries inside the R17 window: NONE — all 50
-# names carry value-exact DuckDB oracles.
-_WINDOW_R17_ROWS_ONLY: list[str] = []
-
-# Round-18 window, pinned in round 18 (derived by
-# scripts/window_plan.py after _WINDOW_R17 went active): rotation-only
-# re-greens — the 8 remaining r12-vintage names (alphabetically after
-# the 41 the r17 window took), then the 42 alphabetically-first
-# r13-vintage names. Rows-only entries: q_bpe_learn (driver-sequenced
-# merge recurrence, SURVEY §2.40) and q_mst_boruvka (DuckDB 1.0
-# recursive-CTE limitation, re-probe trigger DuckDB ≥1.3).
-_WINDOW_R18 = [
-    # r12 remainder (last 8 of the r12 cohort, alphabetical)
-    "q_sort_limit",
-    "q_tpch_q5",
-    "q_tpch_q6",
-    "q_tpch_q7",
-    "q_tpch_q8",
-    "q_window_laglead",
-    "q_window_ntile",
-    "q_write_shards",
-    # r13 greens, alphabetical, first 42 (8 + 42 = 50)
-    "q_ab_ttest",
-    "q_attribution",
-    "q_auc_rank",
-    "q_bigram_lm",
-    "q_bloom_prefilter",
-    "q_bpe_learn",
-    "q_butterfly_sampled",
-    "q_ccnet_bucket",
-    "q_cdc_apply",
-    "q_conductance",
-    "q_containment",
-    "q_count_min",
-    "q_dbscan",
-    "q_decayed_count",
-    "q_diff_snapshot",
-    "q_dsir_weights",
-    "q_equi_depth_hist",
-    "q_expectations",
-    "q_feature_hash",
-    "q_fn_try",
-    "q_freq_pairs",
-    "q_gaps_islands",
-    "q_gopher_quality",
-    "q_graph_coloring",
-    "q_hits",
-    "q_incremental_agg",
-    "q_interval_overlap",
-    "q_kcore",
-    "q_ktruss",
-    "q_label_noise",
-    "q_label_propagation",
-    "q_louvain_one_level",
-    "q_mad_outlier",
-    "q_markov_transitions",
-    "q_mode_agg",
-    "q_mst_boruvka",
-    "q_partition_nmi",
-    "q_profile_columns",
-    "q_random_walk",
-    "q_seeded_order",
-    "q_subquery_scalar",
-    "q_symmetrize",
-]
-
-# Rows-only-by-contract entries inside the R18 window: q_bpe_learn
-# (exact pure-Python merge-list golden) and q_mst_boruvka (networkx
-# MSF-weight golden) — both documented rejections in SURVEY §2.40.
-_WINDOW_R18_ROWS_ONLY = [
-    "q_bpe_learn",
-    "q_mst_boruvka",
-]
-
-# Round-19 window, pinned in round 19 (derived by
-# scripts/window_plan.py after _WINDOW_R18 went active): rotation-only
-# re-greens — the 8 remaining r13-vintage names (alphabetically after
-# the 42 the r18 window took), then the 42 alphabetically-first
-# r14-vintage names. Rows-only entry: q_bpe_encode (driver-sequenced
-# BPE merge recurrence, SURVEY §2.40).
-_WINDOW_R19 = [
+# The active window, as scripts/window_plan.py derived it: the 50 names
+# with the oldest driver rows once the previous window ran.
+WINDOW = [
     # r13 remainder (last 8 of the r13 cohort, alphabetical)
     "q_tpch_q11",
     "q_tpch_q16",
@@ -1128,153 +125,10 @@ _WINDOW_R19 = [
     "q_sorted_neighborhood",
 ]
 
-# Rows-only-by-contract entries inside the R19 window: q_bpe_encode
-# (exact pure-Python BPE-encode golden over the learned merge list) —
-# a documented rejection in SURVEY §2.40.
-_WINDOW_R19_ROWS_ONLY = [
-    "q_bpe_encode",
-]
-
-# Round-20 window, pinned in round 20 (derived by
-# scripts/window_plan.py after _WINDOW_R19 went active): rotation-only
-# re-greens — the 8 remaining r14-vintage names (alphabetically after
-# the 42 the r19 window took), then the 42 alphabetically-first
-# r15-vintage names. Rows-only entries: the louvain-family end-to-end
-# results (parallel move order is engine-defined), q_approx_quantile
-# (sketch internals engine-defined) and q_pca_power (iterative float
-# convergence) — all documented rejections with golden/invariant
-# pytest evidence (SURVEY §2.40).
-_WINDOW_R20 = [
-    # r14 remainder (last 8 of the r14 cohort, alphabetical)
-    "q_stream_metrics",
-    "q_stream_watermark",
-    "q_substring_dup",
-    "q_target_encode",
-    "q_train_split",
-    "q_weighted_median",
-    "q_window_cume",
-    "q_zorder_layout",
-    # r15 greens, alphabetical, first 42 (8 + 42 = 50)
-    "q_ann_ivf",
-    "q_approx_quantile",
-    "q_best_move",
-    "q_calibration",
-    "q_com_totals",
-    "q_connected_components",
-    "q_data_mix",
-    "q_dedup_doc_exact",
-    "q_delta_q",
-    "q_delta_q_directed",
-    "q_dup_embedding",
-    "q_frame_sample",
-    "q_geo_density",
-    "q_grid_join",
-    "q_histogram",
-    "q_intra_inter_edges",
-    "q_is_partition",
-    "q_knn_label",
-    "q_ks_test",
-    "q_lang_id",
-    "q_lang_stats",
-    "q_leiden_refine",
-    "q_louvain_communities",
-    "q_louvain_dendrogram",
-    "q_louvain_directed",
-    "q_louvain_distributed",
-    "q_modularity",
-    "q_modularity_directed",
-    "q_mom_yoy",
-    "q_multimodal_features",
-    "q_multimodal_meta",
-    "q_ndcg",
-    "q_neighbor_com_weights",
-    "q_pca_power",
-    "q_quantile_normalize",
-    "q_read_xml",
-    "q_rich_club",
-    "q_sketch_union",
-    "q_spearman",
-    "q_sql_pipe",
-    "q_stream_join_outer",
-    "q_stream_topk",
-]
-
-# Rows-only-by-contract entries inside the R20 window (no DuckDB
-# oracle; each carries golden/invariant pytest evidence).
-_WINDOW_R20_ROWS_ONLY = [
-    "q_approx_quantile",
-    "q_leiden_refine",
-    "q_louvain_communities",
-    "q_louvain_dendrogram",
-    "q_louvain_directed",
-    "q_louvain_distributed",
-    "q_pca_power",
-]
-
-# Every query name that has appeared in a driver CORRECTNESS window,
-# rounds 1-5 (= union of CORRECTNESS_r0{1..5}.json keys; 193 names).
-# Frozen history — append-only as windows run.
-_EVER_WINDOWED_PRE_R06 = frozenset({
-    "q_adamic_adar", "q_adjacency_pivot", "q_agg_distinct",
-    "q_agg_groupby", "q_ann_ivf", "q_ann_lsh", "q_approx_cd",
-    "q_approx_quantile", "q_approx_topk", "q_assortativity",
-    "q_best_move", "q_betweenness", "q_betweenness_sampled",
-    "q_bfs_hops", "q_bipartite_project", "q_bm25",
-    "q_chunk_sliding", "q_closeness", "q_clustering_coeff",
-    "q_coarsen_edges", "q_com_totals", "q_connected_components",
-    "q_contamination", "q_cross_small", "q_cube", "q_data_mix",
-    "q_dedup_doc_exact", "q_dedup_exact", "q_dedup_minhash",
-    "q_default_weight", "q_degree_dist", "q_degree_inout",
-    "q_degree_weighted", "q_delta_q", "q_delta_q_directed",
-    "q_doc_fingerprint", "q_dup_clusters", "q_dup_embedding",
-    "q_eccentricity", "q_edge_agg_parallel", "q_edges_from_relational",
-    "q_eigenvector", "q_embedding_centroid", "q_embedding_normalize",
-    "q_entropy_tokens", "q_filter_pred", "q_filtered_agg",
-    "q_frame_sample", "q_fn_array",
-    "q_fn_cond", "q_fn_date", "q_fn_json", "q_fn_map", "q_fn_math",
-    "q_fn_string", "q_fn_struct", "q_fn_variant", "q_funnel",
-    "q_fuzzy_join", "q_gap_fill", "q_graph_size_m", "q_grouping_sets",
-    "q_grouping_sets_explicit", "q_harmonic_centrality", "q_histogram",
-    "q_hll_sketch", "q_intra_inter_edges", "q_is_partition",
-    "q_jaccard_nodes", "q_join_asof", "q_join_broadcast",
-    "q_join_bucketed", "q_join_full_outer", "q_join_inner",
-    "q_join_outer", "q_join_semi_anti", "q_join_theta_range",
-    "q_kcore", "q_kmeans", "q_knn_label", "q_label_propagation",
-    "q_lang_id", "q_lang_stats", "q_lateral_topk", "q_latest_per_key",
-    "q_length_filter", "q_louvain_communities", "q_louvain_dendrogram",
-    "q_louvain_directed", "q_louvain_distributed", "q_louvain_one_level",
-    "q_membership_rollup", "q_merge_upsert", "q_modularity",
-    "q_modularity_directed", "q_multimodal_features", "q_multimodal_meta",
-    "q_neighbor_com_weights", "q_ngram_counts", "q_ngram_jaccard",
-    "q_null_semantics", "q_pack_sequences", "q_pagerank",
-    "q_partition_quality",
-    "q_personalized_pagerank", "q_pii_scrub", "q_pivot_status",
-    "q_pmi_cooccur", "q_quality_score", "q_quantiles", "q_read_csv",
-    "q_read_edgelist", "q_read_json", "q_read_merge_schema",
-    "q_read_orc", "q_read_text_log", "q_repetition_ratio",
-    "q_resolution_sweep", "q_retention_cohort", "q_robust_scale",
-    "q_rolling_7d", "q_rollup_time", "q_salted_join", "q_sample_hash",
-    "q_sample_stratified", "q_scan_parquet", "q_scc", "q_scd2_intervals",
-    "q_seeded_order", "q_selfloop_filter", "q_semdedup", "q_sessionize",
-    "q_set_ops", "q_sim_topk", "q_simhash", "q_sort_limit",
-    "q_sssp_weighted", "q_stats_agg", "q_stopword_remove",
-    "q_stream_dedup", "q_stream_file_sink", "q_stream_foreach_batch",
-    "q_stream_session", "q_stream_sliding", "q_stream_static_join",
-    "q_stream_stateful_count", "q_stream_stream_join",
-    "q_stream_tumbling", "q_stream_watermark", "q_string_agg",
-    "q_subquery_scalar", "q_symmetrize", "q_tfidf", "q_text_tokens",
-    "q_time_weighted_avg", "q_token_count", "q_token_vocab",
-    "q_tpch_q1", "q_tpch_q10", "q_tpch_q11", "q_tpch_q12", "q_tpch_q13",
-    "q_tpch_q14", "q_tpch_q15", "q_tpch_q16", "q_tpch_q17", "q_tpch_q18",
-    "q_tpch_q19", "q_tpch_q2", "q_tpch_q20", "q_tpch_q21", "q_tpch_q22",
-    "q_tpch_q3", "q_tpch_q4", "q_tpch_q5", "q_tpch_q6", "q_tpch_q7",
-    "q_tpch_q8", "q_tpch_q9", "q_triangle_count",
-    "q_udf_pandas", "q_udtf_tokens", "q_unigram_surprise",
-    "q_union_by_name", "q_unpivot_metrics", "q_window_frame",
-    "q_window_laglead", "q_window_ntile", "q_window_rank",
-    "q_write_edgelist", "q_write_partitioned", "q_write_shards",
-    "q_zscore_outlier",
-})
+# Names in WINDOW without a DuckDB oracle (rows-only check): the exact
+# pure-Python BPE-encode golden over the learned merge list is a
+# documented rejection (SURVEY §2.40).
+WINDOW_ROWS_ONLY = ["q_bpe_encode"]
 
 
 def all_queries() -> dict[str, QueryFn]:
@@ -1284,41 +138,12 @@ def all_queries() -> dict[str, QueryFn]:
         if overlap:
             raise ValueError(f"duplicate query names from {mod.__name__}: {overlap}")
         merged.update(mod.QUERIES)
-    missing = [n for n in _WINDOW_R19 if n not in merged]
+    missing = [n for n in WINDOW if n not in merged]
     if missing:
         raise ValueError(f"window names not registered: {missing}")
-    out: dict[str, QueryFn] = {n: merged[n] for n in _WINDOW_R19}
+    out: dict[str, QueryFn] = {n: merged[n] for n in WINDOW}
     out.update({n: fn for n, fn in merged.items() if n not in out})
     return out
-
-
-def held_queries() -> list[str]:
-    """Registered queries with NO WINDOW PLAN — derived from the
-    registry minus every windowed name (pinned future windows
-    included), replacing the hand-synced prose list the r5 verdict
-    flagged (What's wrong #2). Every registered name has had driver
-    evidence since the r12 window ran (round 13): the held set is
-    EMPTY. test_coverage asserts held == [], so any new registration
-    without a window plan fails loudly."""
-    windowed = (
-        _EVER_WINDOWED_PRE_R06
-        | set(_WINDOW_R06)
-        | set(_WINDOW_R07)
-        | set(_WINDOW_R08)
-        | set(_WINDOW_R09)
-        | set(_WINDOW_R10)
-        | set(_WINDOW_R11)
-        | set(_WINDOW_R12)
-        | set(_WINDOW_R13)
-        | set(_WINDOW_R14)
-        | set(_WINDOW_R15)
-        | set(_WINDOW_R16)
-        | set(_WINDOW_R17)
-        | set(_WINDOW_R18)
-        | set(_WINDOW_R19)
-        | set(_WINDOW_R20)
-    )
-    return sorted(n for n in all_queries() if n not in windowed)
 
 
 def all_oracles() -> dict[str, str]:

@@ -583,7 +583,7 @@ def q_window_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-ORACLE_WINDOW_RANK = """
+ORACLE_RANK_WINDOW = """
 SELECT * FROM (
   SELECT o_custkey, o_orderkey, ROUND(o_totalprice, 2) AS total_price,
          ROW_NUMBER() OVER w AS rn,
@@ -1906,7 +1906,7 @@ ORACLES = {
     "q_join_theta_range": ORACLE_JOIN_THETA_RANGE,
     "q_join_asof": ORACLE_JOIN_ASOF,
     "q_cross_small": ORACLE_CROSS_SMALL,
-    "q_window_rank": ORACLE_WINDOW_RANK,
+    "q_window_rank": ORACLE_RANK_WINDOW,
     "q_window_frame": ORACLE_WINDOW_FRAME,
     "q_window_laglead": ORACLE_WINDOW_LAGLEAD,
     "q_window_nth": ORACLE_WINDOW_NTH,

@@ -841,8 +841,8 @@ QUERIES = {
     "q_stream_join_outer": q_stream_join_outer,
     "q_stream_watermark": q_stream_watermark,
     "q_stream_file_sink": q_stream_file_sink,
-    # registered last on purpose: keeps this round's first-50 driver
-    # correctness window stable (see registry._modules ordering note)
+    # registered last on purpose: past registry.WINDOW, queries()
+    # follows this dict's order, so new names go at the end
     "q_stream_foreach_batch": q_stream_foreach_batch,
     "q_stream_metrics": q_stream_metrics,
     "q_stream_topk": q_stream_topk,

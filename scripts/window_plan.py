@@ -1,26 +1,16 @@
 """Derive the next driver-window rotation from CORRECTNESS history.
 
 The correctness driver verifies the FIRST 50 entries of
-``registry.all_queries()`` each round; windows are pinned one round
-ahead as ``_WINDOW_RNN`` data. The rotation policy (r5 verdict onward)
-is mechanical: after the active window runs, re-green the 50 names
-whose latest driver CORRECTNESS row is OLDEST, ties broken
-alphabetically. This tool computes that list so the next round's pin
-is derived, not hand-synced — the same de-prose-ification
-held_queries() got in r5.
-
-Round-11 refinement (r10 verdict task 2): an ORACLE UPGRADE resets
-staleness. When a query gains a value-exact DuckDB oracle AFTER its
-latest driver row (so that row is still a weak rows-only check), the
-contract's hard signal — rows+schema+hash — has never run for it.
-Round-vintage staleness alone would queue such names behind 100+
-older hash-greens; instead they sort FIRST (maximal staleness, before
-every dated row, tied with never-windowed names).
+``registry.all_queries()`` each round, and ``registry.WINDOW`` leads
+that order. The rotation policy is mechanical: after the active window
+runs, re-green the 50 names whose latest driver CORRECTNESS row is
+OLDEST, ties broken alphabetically. This tool computes that list.
 
 Usage:
     python scripts/window_plan.py            # print the next-50 plan
-    python scripts/window_plan.py --check    # verify the highest
-        pinned _WINDOW_RNN equals the derived plan (exit 1 on drift)
+
+To rotate, paste the printed names into ``registry.WINDOW`` and set
+``registry.WINDOW_ROWS_ONLY`` to those of them that have no oracle.
 
 Assumes the ACTIVE window (the head of the registry iteration order)
 refreshes before the next one runs, i.e. its names drop to the bottom
@@ -31,46 +21,22 @@ from __future__ import annotations
 
 import glob
 import json
+import os
 import re
 import sys
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 from louvain_modularity_spark import registry  # noqa: E402
 
 WINDOW_SIZE = 50
 
-# query -> round in which its oracle was added/upgraded to value-exact
-# (SURVEY §2.33). A driver row OLDER than this round pre-dates the
-# oracle, so the query has never been hash-checked by the driver and
-# sorts maximally stale. Append-only, one entry per upgrade batch.
-ORACLE_UPGRADED = {
-    "q_sample_hash": 10,
-    "q_udf_pandas": 10,
-    "q_dedup_minhash": 10,
-    "q_simhash": 10,
-    "q_ann_lsh": 10,
-    "q_approx_topk": 10,
-    "q_kcore": 12,
-    "q_ktruss": 12,
-    "q_graph_coloring": 12,
-    "q_dbscan": 12,
-    "q_seeded_order": 12,
-    "q_label_propagation": 12,
-    # in the ACTIVE r11 window when upgraded, so its first hash row
-    # lands in CORRECTNESS_r12 and the entry is immediately satisfied
-    "q_betweenness_sampled": 12,
-    "q_louvain_one_level": 12,
-    "q_pq_ann": 13,
-    "q_stream_watermark": 13,
-    "q_approx_cd": 13,
-}
-
 
 def latest_driver_round() -> dict[str, int]:
     """query name -> most recent round with a driver CORRECTNESS row."""
     latest: dict[str, int] = {}
-    for path in sorted(glob.glob("/root/repo/CORRECTNESS_r*.json")):
+    for path in sorted(glob.glob(os.path.join(ROOT, "CORRECTNESS_r*.json"))):
         rnd = int(re.search(r"r0*(\d+)\.json$", path).group(1))
         with open(path) as fh:
             data = json.load(fh)
@@ -86,47 +52,20 @@ def next_window(active: list[str] | None = None) -> list[str]:
         # order — derive it so this tool needs no per-round edit
         active = list(registry.all_queries())[:WINDOW_SIZE]
     latest = latest_driver_round()
-    # an oracle upgrade invalidates older (rows-only) driver evidence:
-    # the query has never been HASH-checked, so it sorts maximally
-    # stale — applied BEFORE the active-window override, because the
-    # active window is about to produce a fresh hash row
-    for name, rnd in ORACLE_UPGRADED.items():
-        if latest.get(name, 0) < rnd:
-            latest[name] = -1
     # names the active window is about to refresh sort last
     horizon = 1 + max(latest.values(), default=0)
     for name in active:
         latest[name] = horizon
-    # never-windowed names (none today; guard for future unfreezes)
+    # never-windowed names sort first
     for name in registry.all_queries():
         latest.setdefault(name, -1)
     order = sorted(latest, key=lambda n: (latest[n], n))
     return order[:WINDOW_SIZE]
 
 
-def pinned_next_window() -> tuple[str, list[str]]:
-    """The highest-numbered _WINDOW_RNN pin in the registry — the one
-    planned for the NEXT round (no per-round edit needed here)."""
-    names = sorted(
-        (a for a in dir(registry) if re.fullmatch(r"_WINDOW_R\d+", a)),
-        key=lambda a: int(a[len("_WINDOW_R"):]),
-    )
-    return names[-1], getattr(registry, names[-1])
-
-
 def main() -> int:
-    plan = next_window()
-    if "--check" in sys.argv:
-        attr, pinned = pinned_next_window()
-        if sorted(pinned) != sorted(plan):
-            extra = sorted(set(pinned) - set(plan))
-            miss = sorted(set(plan) - set(pinned))
-            print(f"DRIFT in {attr}: pinned-not-derived={extra} derived-not-pinned={miss}")
-            return 1
-        print(f"OK: pinned {attr} matches the derived {len(plan)}-name plan")
-        return 0
     latest = latest_driver_round()
-    for name in plan:
+    for name in next_window():
         print(f"{name}  # last driver row: r{latest.get(name, '-')}")
     return 0
 

@@ -1,6 +1,7 @@
 """Reference-shaped API facade behaves like the reference entry points."""
 
 import pytest
+from conftest import SF_DIR
 
 from louvain_modularity_spark import api
 from louvain_modularity_spark.metrics import KARATE_GOLDEN_Q, KARATE_GOLDEN_PARTITION
@@ -85,20 +86,47 @@ def test_read_edgelist_generic(spark, tmp_path):
     assert res.count() == 3
 
 
-def test_lineage_cut_reliable_checkpoint_agrees(spark, tmp_path):
-    """lineage_cut's cluster arm: with spark.graft.checkpointDir set,
-    every cut becomes a reliable checkpoint() instead of an eager
-    localCheckpoint — an iterative query (k-core: per-round anti-join
-    peeling, many cuts) must produce identical rows either way, the
-    same both-branches pin as Borůvka/CC/dup-embedding."""
-    from conftest import SF_DIR
-
+def _kcore(spark, monkeypatch):
     from louvain_modularity_spark.graph import q_kcore
 
-    base = sorted(map(tuple, q_kcore(spark, SF_DIR).collect()))
+    return q_kcore(spark, SF_DIR)
+
+
+def _louvain_distributed(spark, monkeypatch):
+    from louvain_modularity_spark.louvain import louvain_communities
+    from louvain_modularity_spark.sources import copurchase_edges
+
+    # two distributed levels: the first level's lazy coarse-graph cut
+    # is the second level's input
+    edges = copurchase_edges(spark, SF_DIR)
+    return louvain_communities(
+        spark, edges, inline_threshold=0, max_sweeps=2, max_level=2
+    ).assignment
+
+
+def _mst_distributed(spark, monkeypatch):
+    import louvain_modularity_spark.graph as G
+
+    monkeypatch.setattr(G, "MST_INLINE_MERGE_EDGES", 0)
+    return G.q_mst_boruvka(spark, SF_DIR)
+
+
+@pytest.mark.parametrize(
+    "run",
+    [_kcore, _louvain_distributed, _mst_distributed],
+    ids=["kcore", "louvain_distributed", "mst_distributed"],
+)
+def test_lineage_cut_reliable_checkpoint_agrees(spark, tmp_path, monkeypatch, run):
+    """lineage_cut's cluster arm: with spark.graft.checkpointDir set,
+    every cut becomes a reliable checkpoint() instead of a
+    localCheckpoint. Iterative queries with many cuts must produce
+    identical rows either way: k-core's per-round anti-join peeling,
+    and the lazy cuts of a fully distributed Louvain (coarse graph,
+    moves) and of Borůvka's distributed merge (comp, best)."""
+    base = sorted(map(tuple, run(spark, monkeypatch).collect()))
     spark.conf.set("spark.graft.checkpointDir", str(tmp_path / "ckpt"))
     try:
-        forced = sorted(map(tuple, q_kcore(spark, SF_DIR).collect()))
+        forced = sorted(map(tuple, run(spark, monkeypatch).collect()))
     finally:
         spark.conf.unset("spark.graft.checkpointDir")
     assert forced == base and base

@@ -46,366 +46,47 @@ def test_documented_counts_match_registry():
     )
 
 
-def test_r19_window_leads_registry():
-    """The driver checks the first 50 registry entries; the pinned
-    round-19 window must lead the iteration order (rotated active in
-    round 20): the 8 remaining r13-vintage names first (the oldest
-    driver rows in the registry), then the 42 alphabetically-first
-    r14 greens. One rows-only entry (q_bpe_encode — documented
-    rejection)."""
-    from louvain_modularity_spark.registry import (
-        _WINDOW_R19,
-        _WINDOW_R19_ROWS_ONLY,
-    )
+def _window_plan():
+    """scripts/window_plan.py loaded as a module (scripts/ is not a
+    package)."""
+    import importlib.util
+    import pathlib
+
+    path = pathlib.Path(__file__).resolve().parents[1] / "scripts" / "window_plan.py"
+    spec = importlib.util.spec_from_file_location("window_plan", path)
+    mod = importlib.util.module_from_spec(spec)
+    spec.loader.exec_module(mod)
+    return mod
+
+
+def test_window_leads_registry():
+    """The driver checks the first 50 registry entries: WINDOW must lead
+    the iteration order with 50 distinct registered names, and
+    WINDOW_ROWS_ONLY must name exactly the window's oracle-less
+    entries."""
+    from louvain_modularity_spark.registry import WINDOW, WINDOW_ROWS_ONLY
 
     q, o = all_queries(), all_oracles()
-    assert list(q)[: len(_WINDOW_R19)] == _WINDOW_R19
-    assert len(_WINDOW_R19) == 50 == len(set(_WINDOW_R19))
-    not_backed = [n for n in _WINDOW_R19 if n not in o]
-    assert sorted(not_backed) == sorted(_WINDOW_R19_ROWS_ONLY), (
-        f"unplanned rows-only queries in driver window: "
-        f"{sorted(set(not_backed) - set(_WINDOW_R19_ROWS_ONLY))}"
+    assert list(q)[:50] == WINDOW
+    assert len(WINDOW) == 50 == len(set(WINDOW))
+    not_backed = [n for n in WINDOW if n not in o]
+    assert sorted(not_backed) == sorted(WINDOW_ROWS_ONLY), (
+        f"WINDOW_ROWS_ONLY out of sync with the registry's oracle map: "
+        f"window names without an oracle are {sorted(not_backed)}"
     )
 
 
-def test_backlog_empty_after_r10_window():
-    """The r5 verdict (What's wrong #2): the held-for-later inventory
-    must be DERIVED, not a hand-synced prose comment. held_queries()
-    computes registry minus every windowed name; every registered name
-    has had driver evidence since round 10, so the held set is EMPTY.
-    The windows must be mutually disjoint, rotation slots must all be
-    previously-windowed re-greens, and the pinned _WINDOW_R13 must
-    cover the next-stalest cohort (oracle-upgrade rule first — see
-    scripts/window_plan.py ORACLE_UPGRADED). Any NEW registration must
-    be added to a window plan in the same commit or this fails."""
-    from louvain_modularity_spark.registry import (
-        _EVER_WINDOWED_PRE_R06,
-        _WINDOW_R06,
-        _WINDOW_R07,
-        _WINDOW_R08,
-        _WINDOW_R09,
-        _WINDOW_R09_LEAD,
-        _WINDOW_R09_ROTATION,
-        _WINDOW_R10,
-        _WINDOW_R11,
-        _WINDOW_R12,
-        held_queries,
-    )
+def test_every_query_has_driver_row_or_window():
+    """Every registered name has driver evidence: a row in some
+    CORRECTNESS_r*.json, or a place in the active WINDOW. A new
+    registration with no window plan fails here."""
+    from louvain_modularity_spark.registry import WINDOW
 
-    held = held_queries()
+    covered = set(_window_plan().latest_driver_round()) | set(WINDOW)
+    held = sorted(set(all_queries()) - covered)
     assert held == [], (
-        f"registered queries with no window plan: {held} — add them to "
-        f"a pinned window in the same commit"
+        f"registered queries with neither a driver row nor a window: {held}"
     )
-    # r9 plan shape: 50 distinct registered names; rotation slots are
-    # all previously-windowed (staleness re-greens), lead is all-new
-    assert len(_WINDOW_R09) == 50 == len(set(_WINDOW_R09))
-    assert not set(_WINDOW_R09) & set(_WINDOW_R08)
-    unknown_r09 = set(_WINDOW_R09) - set(all_queries())
-    assert not unknown_r09, f"r09 window names not registered: {sorted(unknown_r09)}"
-    assert set(_WINDOW_R09_ROTATION) <= (
-        _EVER_WINDOWED_PRE_R06 | set(_WINDOW_R06) | set(_WINDOW_R07)
-    )
-    assert not set(_WINDOW_R09_LEAD) & (
-        _EVER_WINDOWED_PRE_R06
-        | set(_WINDOW_R06)
-        | set(_WINDOW_R07)
-        | set(_WINDOW_R08)
-    )
-    # r10 plan shape: rotation-only (SURVEY §2.32 re-froze the
-    # registry), 50 distinct, disjoint from r9, every name a
-    # previously-windowed re-green
-    assert len(_WINDOW_R10) == 50 == len(set(_WINDOW_R10))
-    assert not set(_WINDOW_R10) & set(_WINDOW_R09)
-    unknown_r10 = set(_WINDOW_R10) - set(all_queries())
-    assert not unknown_r10, f"r10 window names not registered: {sorted(unknown_r10)}"
-    assert set(_WINDOW_R10) <= (
-        _EVER_WINDOWED_PRE_R06 | set(_WINDOW_R06) | set(_WINDOW_R07) | set(_WINDOW_R08)
-    )
-    from louvain_modularity_spark.registry import _WINDOW_R10_ROWS_ONLY
-
-    assert sorted(n for n in _WINDOW_R10 if n not in all_oracles()) == sorted(
-        _WINDOW_R10_ROWS_ONLY
-    ), "r10 rows-only pin out of sync with the registry's oracle map"
-    # r11 plan shape: rotation-only (SURVEY §2.34 re-froze the
-    # registry), 50 distinct, disjoint from r10, every name a
-    # previously-windowed re-green
-    assert len(_WINDOW_R11) == 50 == len(set(_WINDOW_R11))
-    assert not set(_WINDOW_R11) & set(_WINDOW_R10)
-    unknown_r11 = set(_WINDOW_R11) - set(all_queries())
-    assert not unknown_r11, f"r11 window names not registered: {sorted(unknown_r11)}"
-    assert set(_WINDOW_R11) <= (
-        _EVER_WINDOWED_PRE_R06
-        | set(_WINDOW_R06)
-        | set(_WINDOW_R07)
-        | set(_WINDOW_R08)
-        | set(_WINDOW_R09)
-    )
-    from louvain_modularity_spark.registry import _WINDOW_R11_ROWS_ONLY
-
-    assert sorted(n for n in _WINDOW_R11 if n not in all_oracles()) == sorted(
-        _WINDOW_R11_ROWS_ONLY
-    ), "r11 rows-only pin out of sync with the registry's oracle map"
-    # the oracle-upgrade staleness rule is in effect: the three names
-    # whose oracles postdate their last driver row lead the r11 pin
-    assert _WINDOW_R11[:3] == ["q_ann_lsh", "q_dedup_minhash", "q_simhash"]
-    # r12 plan shape: 50 distinct, disjoint from r11, led by the one
-    # never-windowed r12 registration (q_butterfly_sampled, the
-    # r11-verdict-task-6 sampled twin) per the window_plan.py
-    # never-windowed rule; every other slot a previously-windowed
-    # re-green (7 oracle-upgraded + 10 r5 + 32 r6)
-    assert len(_WINDOW_R12) == 50 == len(set(_WINDOW_R12))
-    assert not set(_WINDOW_R12) & set(_WINDOW_R11)
-    unknown_r12 = set(_WINDOW_R12) - set(all_queries())
-    assert not unknown_r12, f"r12 window names not registered: {sorted(unknown_r12)}"
-    assert _WINDOW_R12[0] == "q_butterfly_sampled"
-    assert set(_WINDOW_R12) - {"q_butterfly_sampled"} <= (
-        _EVER_WINDOWED_PRE_R06
-        | set(_WINDOW_R06)
-        | set(_WINDOW_R07)
-        | set(_WINDOW_R08)
-        | set(_WINDOW_R09)
-        | set(_WINDOW_R10)
-    )
-    from louvain_modularity_spark.registry import _WINDOW_R12_ROWS_ONLY
-
-    assert sorted(n for n in _WINDOW_R12 if n not in all_oracles()) == sorted(
-        _WINDOW_R12_ROWS_ONLY
-    ), "r12 rows-only pin out of sync with the registry's oracle map"
-    # r13 plan shape: rotation-only (no r13 registrations), 50
-    # distinct, disjoint from r12, every name a previously-windowed
-    # re-green: the two mid-r13 oracle upgrades lead (q_pq_ann,
-    # q_stream_watermark — SURVEY §2.40), then 16 r6 remainders + 32
-    # alphabetically-first r7 greens
-    from louvain_modularity_spark.registry import (
-        _WINDOW_R13,
-        _WINDOW_R13_ROWS_ONLY,
-    )
-
-    assert len(_WINDOW_R13) == 50 == len(set(_WINDOW_R13))
-    assert not set(_WINDOW_R13) & set(_WINDOW_R12)
-    unknown_r13 = set(_WINDOW_R13) - set(all_queries())
-    assert not unknown_r13, f"r13 window names not registered: {sorted(unknown_r13)}"
-    assert set(_WINDOW_R13) <= (
-        _EVER_WINDOWED_PRE_R06
-        | set(_WINDOW_R06)
-        | set(_WINDOW_R07)
-        | set(_WINDOW_R08)
-        | set(_WINDOW_R09)
-        | set(_WINDOW_R10)
-        | set(_WINDOW_R11)
-    )
-    assert sorted(n for n in _WINDOW_R13 if n not in all_oracles()) == sorted(
-        _WINDOW_R13_ROWS_ONLY
-    ), "r13 rows-only pin out of sync with the registry's oracle map"
-    # r14 plan shape: rotation-only (no r14 registrations), 50
-    # distinct, disjoint from r13, every name a previously-windowed
-    # re-green: 17 r7 remainders + 33 alphabetically-first r9 names
-    from louvain_modularity_spark.registry import (
-        _WINDOW_R14,
-        _WINDOW_R14_ROWS_ONLY,
-    )
-
-    assert len(_WINDOW_R14) == 50 == len(set(_WINDOW_R14))
-    assert not set(_WINDOW_R14) & set(_WINDOW_R13)
-    unknown_r14 = set(_WINDOW_R14) - set(all_queries())
-    assert not unknown_r14, f"r14 window names not registered: {sorted(unknown_r14)}"
-    assert set(_WINDOW_R14) <= (
-        _EVER_WINDOWED_PRE_R06
-        | set(_WINDOW_R06)
-        | set(_WINDOW_R07)
-        | set(_WINDOW_R08)
-        | set(_WINDOW_R09)
-    )
-    assert sorted(n for n in _WINDOW_R14 if n not in all_oracles()) == sorted(
-        _WINDOW_R14_ROWS_ONLY
-    ), "r14 rows-only pin out of sync with the registry's oracle map"
-    # r15 plan shape: rotation-only (no r15 registrations), 50
-    # distinct, disjoint from r14, every name a previously-windowed
-    # re-green: 11 r9 remainders + 39 alphabetically-first r10 names;
-    # all 50 oracle-backed (first empty rows-only pin)
-    from louvain_modularity_spark.registry import (
-        _WINDOW_R15,
-        _WINDOW_R15_ROWS_ONLY,
-    )
-
-    assert len(_WINDOW_R15) == 50 == len(set(_WINDOW_R15))
-    assert not set(_WINDOW_R15) & set(_WINDOW_R14)
-    unknown_r15 = set(_WINDOW_R15) - set(all_queries())
-    assert not unknown_r15, f"r15 window names not registered: {sorted(unknown_r15)}"
-    assert set(_WINDOW_R15) <= (
-        _EVER_WINDOWED_PRE_R06
-        | set(_WINDOW_R06)
-        | set(_WINDOW_R07)
-        | set(_WINDOW_R08)
-        | set(_WINDOW_R09)
-        | set(_WINDOW_R10)
-    )
-    assert sorted(n for n in _WINDOW_R15 if n not in all_oracles()) == sorted(
-        _WINDOW_R15_ROWS_ONLY
-    ), "r15 rows-only pin out of sync with the registry's oracle map"
-    assert _WINDOW_R15_ROWS_ONLY == []
-    # r16 plan shape: rotation-only (no r16 registrations), 50
-    # distinct, disjoint from r15, every name a previously-windowed
-    # re-green: 10 r10 remainders + 40 alphabetically-first r11 names;
-    # exactly one rows-only entry (q_hll_sketch, oracle rejected with a
-    # measured receipt in r14)
-    from louvain_modularity_spark.registry import (
-        _WINDOW_R16,
-        _WINDOW_R16_ROWS_ONLY,
-    )
-
-    assert len(_WINDOW_R16) == 50 == len(set(_WINDOW_R16))
-    assert not set(_WINDOW_R16) & set(_WINDOW_R15)
-    unknown_r16 = set(_WINDOW_R16) - set(all_queries())
-    assert not unknown_r16, f"r16 window names not registered: {sorted(unknown_r16)}"
-    assert set(_WINDOW_R16) <= (
-        _EVER_WINDOWED_PRE_R06
-        | set(_WINDOW_R06)
-        | set(_WINDOW_R07)
-        | set(_WINDOW_R08)
-        | set(_WINDOW_R09)
-        | set(_WINDOW_R10)
-        | set(_WINDOW_R11)
-    )
-    assert sorted(n for n in _WINDOW_R16 if n not in all_oracles()) == sorted(
-        _WINDOW_R16_ROWS_ONLY
-    ), "r16 rows-only pin out of sync with the registry's oracle map"
-    assert _WINDOW_R16_ROWS_ONLY == ["q_hll_sketch"]
-    # r17 plan shape: rotation-only (no r17 registrations), 50
-    # distinct, disjoint from r16, every name a previously-windowed
-    # re-green: 9 r11 remainders + 41 alphabetically-first r12 names;
-    # all 50 oracle-backed (empty rows-only pin)
-    from louvain_modularity_spark.registry import (
-        _WINDOW_R17,
-        _WINDOW_R17_ROWS_ONLY,
-    )
-
-    assert len(_WINDOW_R17) == 50 == len(set(_WINDOW_R17))
-    assert not set(_WINDOW_R17) & set(_WINDOW_R16)
-    unknown_r17 = set(_WINDOW_R17) - set(all_queries())
-    assert not unknown_r17, f"r17 window names not registered: {sorted(unknown_r17)}"
-    assert set(_WINDOW_R17) <= (
-        _EVER_WINDOWED_PRE_R06
-        | set(_WINDOW_R06)
-        | set(_WINDOW_R07)
-        | set(_WINDOW_R08)
-        | set(_WINDOW_R09)
-        | set(_WINDOW_R10)
-        | set(_WINDOW_R11)
-        | set(_WINDOW_R12)
-    )
-    assert sorted(n for n in _WINDOW_R17 if n not in all_oracles()) == sorted(
-        _WINDOW_R17_ROWS_ONLY
-    ), "r17 rows-only pin out of sync with the registry's oracle map"
-    assert _WINDOW_R17_ROWS_ONLY == []
-    # r18 plan shape: rotation-only (no r18 registrations), 50
-    # distinct, disjoint from r17, every name a previously-windowed
-    # re-green: 8 r12 remainders + 42 alphabetically-first r13 names;
-    # two rows-only entries (q_bpe_learn, q_mst_boruvka — both
-    # documented rejections, SURVEY §2.40)
-    from louvain_modularity_spark.registry import (
-        _WINDOW_R18,
-        _WINDOW_R18_ROWS_ONLY,
-    )
-
-    assert len(_WINDOW_R18) == 50 == len(set(_WINDOW_R18))
-    assert not set(_WINDOW_R18) & set(_WINDOW_R17)
-    unknown_r18 = set(_WINDOW_R18) - set(all_queries())
-    assert not unknown_r18, f"r18 window names not registered: {sorted(unknown_r18)}"
-    assert set(_WINDOW_R18) <= (
-        _EVER_WINDOWED_PRE_R06
-        | set(_WINDOW_R06)
-        | set(_WINDOW_R07)
-        | set(_WINDOW_R08)
-        | set(_WINDOW_R09)
-        | set(_WINDOW_R10)
-        | set(_WINDOW_R11)
-        | set(_WINDOW_R12)
-        | set(_WINDOW_R13)
-    )
-    assert sorted(n for n in _WINDOW_R18 if n not in all_oracles()) == sorted(
-        _WINDOW_R18_ROWS_ONLY
-    ), "r18 rows-only pin out of sync with the registry's oracle map"
-    assert _WINDOW_R18_ROWS_ONLY == ["q_bpe_learn", "q_mst_boruvka"]
-    # r19 plan shape: rotation-only (no r19 registrations), 50
-    # distinct, disjoint from r18, every name a previously-windowed
-    # re-green: 8 r13 remainders + 42 alphabetically-first r14 names;
-    # one rows-only entry (q_bpe_encode — documented rejection,
-    # SURVEY §2.40)
-    from louvain_modularity_spark.registry import (
-        _WINDOW_R19,
-        _WINDOW_R19_ROWS_ONLY,
-    )
-
-    assert len(_WINDOW_R19) == 50 == len(set(_WINDOW_R19))
-    assert not set(_WINDOW_R19) & set(_WINDOW_R18)
-    unknown_r19 = set(_WINDOW_R19) - set(all_queries())
-    assert not unknown_r19, f"r19 window names not registered: {sorted(unknown_r19)}"
-    assert set(_WINDOW_R19) <= (
-        _EVER_WINDOWED_PRE_R06
-        | set(_WINDOW_R06)
-        | set(_WINDOW_R07)
-        | set(_WINDOW_R08)
-        | set(_WINDOW_R09)
-        | set(_WINDOW_R10)
-        | set(_WINDOW_R11)
-        | set(_WINDOW_R12)
-        | set(_WINDOW_R13)
-        | set(_WINDOW_R14)
-    )
-    assert sorted(n for n in _WINDOW_R19 if n not in all_oracles()) == sorted(
-        _WINDOW_R19_ROWS_ONLY
-    ), "r19 rows-only pin out of sync with the registry's oracle map"
-    assert _WINDOW_R19_ROWS_ONLY == ["q_bpe_encode"]
-    # r20 plan shape: rotation-only (no r20 registrations), 50
-    # distinct, disjoint from r19, every name a previously-windowed
-    # re-green: 8 r14 remainders + 42 alphabetically-first r15 names;
-    # seven rows-only entries (louvain-family end-to-ends, leiden,
-    # approx_quantile, pca_power — all documented rejections,
-    # SURVEY §2.40)
-    from louvain_modularity_spark.registry import (
-        _WINDOW_R20,
-        _WINDOW_R20_ROWS_ONLY,
-    )
-
-    assert len(_WINDOW_R20) == 50 == len(set(_WINDOW_R20))
-    assert not set(_WINDOW_R20) & set(_WINDOW_R19)
-    unknown_r20 = set(_WINDOW_R20) - set(all_queries())
-    assert not unknown_r20, f"r20 window names not registered: {sorted(unknown_r20)}"
-    assert set(_WINDOW_R20) <= (
-        _EVER_WINDOWED_PRE_R06
-        | set(_WINDOW_R06)
-        | set(_WINDOW_R07)
-        | set(_WINDOW_R08)
-        | set(_WINDOW_R09)
-        | set(_WINDOW_R10)
-        | set(_WINDOW_R11)
-        | set(_WINDOW_R12)
-        | set(_WINDOW_R13)
-        | set(_WINDOW_R14)
-        | set(_WINDOW_R15)
-    )
-    assert sorted(n for n in _WINDOW_R20 if n not in all_oracles()) == sorted(
-        _WINDOW_R20_ROWS_ONLY
-    ), "r20 rows-only pin out of sync with the registry's oracle map"
-    assert _WINDOW_R20_ROWS_ONLY == [
-        "q_approx_quantile",
-        "q_leiden_refine",
-        "q_louvain_communities",
-        "q_louvain_dendrogram",
-        "q_louvain_directed",
-        "q_louvain_distributed",
-        "q_pca_power",
-    ]
-    assert len(_WINDOW_R07) == 50 == len(set(_WINDOW_R07))
-    assert len(_WINDOW_R08) == 50 == len(set(_WINDOW_R08))
-    assert not set(_WINDOW_R07) & set(_WINDOW_R08)
-    assert not set(_WINDOW_R07) & set(_WINDOW_R06)
-    # historical frozen set stays consistent with the registry: every
-    # name in it is still registered (no silent rename/removal)
-    unknown = _EVER_WINDOWED_PRE_R06 - set(all_queries())
-    assert not unknown, f"windowed names no longer registered: {sorted(unknown)}"
 
 
 def test_no_raw_ts_arithmetic():
@@ -1591,27 +1272,16 @@ def test_group_topk_windows_use_window_group_limit(spark):
         assert "WindowGroupLimit" in plan, (fn.__name__, plan)
 
 
-def test_pinned_r10_window_matches_derived_staleness_plan():
-    """The rotation policy is mechanical — re-green the 50 names whose
-    latest driver CORRECTNESS row is oldest (ties alphabetical) once
-    the active window refreshes. scripts/window_plan.py derives that
-    list from the CORRECTNESS_r*.json history; the pinned _WINDOW_R10
-    must equal it, so the next-round pin can never be hand-sync
-    drifted (the held_queries() de-prose-ification, applied to window
-    planning)."""
-    import importlib.util
+def test_window_plan_derives_fresh_window():
+    """scripts/window_plan.py's next rotation is 50 distinct registered
+    names, none of them in the active WINDOW (which it assumes the
+    driver refreshes first)."""
+    from louvain_modularity_spark.registry import WINDOW
 
-    spec = importlib.util.spec_from_file_location(
-        "window_plan", "/root/repo/scripts/window_plan.py"
-    )
-    mod = importlib.util.module_from_spec(spec)
-    spec.loader.exec_module(mod)
-
-    attr, pinned = mod.pinned_next_window()
-    assert sorted(mod.next_window()) == sorted(pinned), (
-        f"{attr} drifted from the derived staleness plan — run "
-        f"`python scripts/window_plan.py` and re-pin"
-    )
+    plan = _window_plan().next_window()
+    assert len(plan) == 50 == len(set(plan))
+    assert set(plan) <= set(all_queries())
+    assert not set(plan) & set(WINDOW)
 
 
 def test_ann_ivf_assignment_is_aggregate_not_window(spark):
